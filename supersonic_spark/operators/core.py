@@ -285,7 +285,7 @@ def salted_join(fact: DataFrame, dim: DataFrame, on: list[str],
     Scale: dim replication is explode on the SMALL side only
     (n_salt x |dim| rows); the fact side is never duplicated and its
     salt is computed scan-local. Row-local salting needs no pre-count
-    job (contrast the skew_precount path in the encode pipeline).
+    job (same as the encode pipeline's salted_repartition).
     """
     if n_salt < 1:
         raise ValueError("n_salt must be >= 1")

@@ -24,9 +24,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 import zlib
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Iterator
 
 import pyarrow as pa
@@ -239,35 +241,9 @@ class EncodeConfig:
     # sortWithinPartitions — measured: the Tungsten string-key sort is the
     # dominant non-scaling CPU stage on many-core single-box runs. Costs
     # one whole-partition buffer in the worker (size partitions to memory).
+    # It is also the only way the shuffle path honours sort_keys that do
+    # not lead with conv_key: the JVM path sorts by (conv hash, order_key).
     sort_in_kernel: bool = False
-    # overlap Arrow IPC with codec compute inside each Python worker: a
-    # bounded feeder thread drains the JVM socket into a small queue
-    # while the kernel encodes the previous batch. Without it the worker
-    # alternates read-then-encode, serializing the two (the JVM->Python
-    # transfer was profiled as the largest non-overlapped stage). Value =
-    # max queued batches; 0 disables.
-    prefetch_batches: int = 2
-    # derive the skew salt row-locally from turn_idx instead of a
-    # pre-count scan: rows with turn_idx < salt_threshold keep salt 0, so
-    # every conversation shorter than the threshold stays contiguous, and
-    # only the TAIL of a mega-conversation splits into salt_block slices —
-    # the same partition-size bound as the pre-count design with zero
-    # extra jobs. The pre-count path (groupBy count + broadcast join) was
-    # profiled as a ~3.5 s job whose cost is FLAT in core count (driver/
-    # scheduling bound), i.e. pure scaling-efficiency loss; it remains
-    # available for A/B as skew_precount=True.
-    skew_precount: bool = False
-    # shuffle + sort on xxhash64(conv_id) (one fixed-width 8-byte key)
-    # instead of the string conv_id itself. The Tungsten string-key sort
-    # was measured as the dominant non-scaling stage (BENCH/BASELINE.md
-    # round-2 profile: 0.74 at 2v8, memory-bus-bound); a long key sorts
-    # via the 8-byte prefix with no record-payload comparisons. A 64-bit
-    # hash collision only interleaves two conversations' rows inside one
-    # partition — decode order is restored from (conv_id, turn_idx) keys,
-    # never from block order, so collisions degrade RLE run lengths for
-    # those two conversations (a few bytes), NEVER correctness. Expected
-    # collisions at 10^12 turns / ~10^10 convs: ~3 pairs.
-    fixed_width_shuffle_key: bool = True
     # bloom-filter chunk stats for point lookups on NON-sort columns.
     # Zone maps only prune on sorted/clustered columns (min/max of an
     # unsorted column spans everything); a small per-(chunk, column)
@@ -286,8 +262,6 @@ class EncodeConfig:
     def config_hash(self, fingerprint: str) -> str:
         blob = json.dumps({
             "sort_in_kernel": self.sort_in_kernel,
-            "fixed_width_shuffle_key": self.fixed_width_shuffle_key,
-            "skew_precount": self.skew_precount,
             "n_partitions": self.n_partitions, "chunk_rows": self.chunk_rows,
             "salt_threshold": self.salt_threshold, "salt_block": self.salt_block,
             "sort_keys": list(self.sort_keys),
@@ -304,15 +278,21 @@ class EncodeConfig:
         return hashlib.md5(blob).hexdigest()[:12]
 
 
+# overlap Arrow IPC with codec compute inside each Python worker: a
+# bounded feeder thread drains the JVM socket into a small queue while the
+# kernel encodes the previous batch. Without it the worker alternates
+# read-then-encode, serializing the two (the JVM->Python transfer was
+# profiled as the largest non-overlapped stage). Value = max queued
+# batches; 2 measured faster than 1 and 4.
+_PREFETCH_DEPTH = 2
+
+
 def _prefetched(batches: Iterator[pa.RecordBatch],
-                depth: int) -> Iterator[pa.RecordBatch]:
+                depth: int = _PREFETCH_DEPTH) -> Iterator[pa.RecordBatch]:
     """Drain `batches` through a bounded queue fed by a daemon thread so
     the JVM->Python Arrow transfer of batch N+1 overlaps the encode of
     batch N (socket reads release the GIL). depth bounds worker memory to
     depth extra transfer batches."""
-    if depth <= 0:
-        yield from batches
-        return
     import queue
     import threading
     q: "queue.Queue" = queue.Queue(maxsize=depth)
@@ -355,6 +335,40 @@ def _prefetched(batches: Iterator[pa.RecordBatch],
         stop.set()
 
 
+# Partition-file naming, shared by block files (part-NNNNN.ssb), resume
+# markers and bucket files (Spark's part-NNNNN-<uuid>...parquet). Ids are
+# zero-padded to 5 digits but may be longer; parse them with _part_id only.
+_PART_ID_RE = re.compile(r"part-(\d+)")
+
+
+def _part_name(pid: int, suffix: str = "") -> str:
+    """File name of partition `pid`: part-{pid:05d}{suffix}."""
+    return f"part-{pid:05d}{suffix}"
+
+
+def _part_id(path: str) -> int | None:
+    """Partition id of a _part_name (or Spark part-file) path; None when
+    the base name does not start with part-<digits>."""
+    m = _PART_ID_RE.match(os.path.basename(path))
+    return int(m.group(1)) if m else None
+
+
+def _part_files(d: str, ext: str) -> dict[int, str]:
+    """{partition id: path} of the part files in directory `d` whose
+    names end in `ext` ({} when `d` does not exist)."""
+    if not os.path.isdir(d):
+        return {}
+    return {_part_id(p): os.path.join(d, p) for p in os.listdir(d)
+            if p.endswith(ext) and _part_id(p) is not None}
+
+
+def _bucket_sort_key(path: str) -> tuple:
+    """Positional order of bucket files: part files by numeric id (so
+    part-100000-* follows part-99999-*), then other names lexically."""
+    pid = _part_id(path)
+    return (0, pid, path) if pid is not None else (1, 0, path)
+
+
 def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                              out_dir: str, cfg_hash: str,
                              overrides: dict[str, str], chunk_rows: int,
@@ -369,7 +383,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
     (encode_table_prebucketed: pid = bucket-file index)."""
     ckpt_dir = os.path.join(out_dir, "checkpoints")
     blk_dir = os.path.join(out_dir, "blocks")
-    marker = os.path.join(ckpt_dir, f"part-{pid:05d}.{cfg_hash}.json")
+    marker = os.path.join(ckpt_dir, _part_name(pid, f".{cfg_hash}.json"))
 
     if os.path.exists(marker):
         with open(marker) as f:
@@ -380,7 +394,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
 
     os.makedirs(ckpt_dir, exist_ok=True)
     os.makedirs(blk_dir, exist_ok=True)
-    blk_path = os.path.join(blk_dir, f"part-{pid:05d}.ssb")
+    blk_path = os.path.join(blk_dir, _part_name(pid, ".ssb"))
     tmp_path = blk_path + f".tmp.{cfg_hash}"
 
     manifest_rows: list[dict] = []
@@ -486,7 +500,6 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
 def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
              chunk_rows: int, entropy: str | None = None,
              sort_keys: tuple[str, ...] | None = None,
-             prefetch: int = 2,
              bloom_cols: tuple[str, ...] = (),
              bloom_bits: int = 16384, bloom_hashes: int = 5):
     """mapInArrow kernel: encode this partition's rows into one block file."""
@@ -494,7 +507,7 @@ def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .runtime import pin_worker_threads
         pin_worker_threads()
-        batches = _prefetched(batches, prefetch)
+        batches = _prefetched(batches)
         from pyspark import TaskContext
         pid = TaskContext.get().partitionId()
         yield _manifest_batch(_encode_partition_stream(
@@ -558,39 +571,34 @@ def salted_repartition(df: DataFrame, cfg: EncodeConfig,
         # no secondary order column -> skew salting unavailable; single key
         out = df.repartition(cfg.n_partitions, F.col(conv))
         return out.sortWithinPartitions(*cfg.sort_keys) if sort_within else out
-    if cfg.skew_precount:
-        counts = df.groupBy(conv).count()
-        skewed = counts.filter(F.col("count") > cfg.salt_threshold).select(conv)
-        df2 = df.join(F.broadcast(skewed.withColumn("_skew", F.lit(True))),
-                      on=conv, how="left")
-        df2 = df2.withColumn(
-            "_salt",
-            F.when(F.col("_skew").isNotNull(),
-                   (F.col(order) / F.lit(cfg.salt_block)).cast("int"))
-             .otherwise(F.lit(0)))
-    else:
-        # row-local salt (see EncodeConfig.skew_precount): head of every
-        # conversation -> salt 0; tail beyond the threshold -> one salt
-        # per salt_block slice. No pre-count scan, no broadcast join.
-        df2 = df.withColumn(
-            "_salt",
-            F.when(F.col(order) < F.lit(cfg.salt_threshold), F.lit(0))
-             .otherwise(
-                 (F.floor((F.col(order) - F.lit(cfg.salt_threshold))
-                          / F.lit(cfg.salt_block)) + 1).cast("int")))
-    if cfg.fixed_width_shuffle_key and sort_within:
-        # exchange + Tungsten sort on an 8-byte key: the sort prefix IS
-        # the whole primary key, so ordering never touches the string
-        # payload (see EncodeConfig.fixed_width_shuffle_key). Conversations
-        # stay contiguous (64-bit hash); decode order comes from the keys.
-        df2 = df2.withColumn("_ck", F.xxhash64(F.col(conv)))
-        out = df2.repartition(cfg.n_partitions, F.col("_ck"), F.col("_salt"))
-        out = out.sortWithinPartitions(F.col("_ck"), F.col(order))
-        return out.drop("_skew", "_salt", "_ck")
-    out = df2.repartition(cfg.n_partitions, F.col(conv), F.col("_salt"))
+    # row-local salt: head of every conversation (turn_idx below the
+    # threshold) -> salt 0, so every conversation shorter than the
+    # threshold stays contiguous; the tail of a mega-conversation gets one
+    # salt per salt_block slice. Same partition-size bound as a pre-count
+    # design (groupBy count + broadcast join) with zero extra jobs — that
+    # pre-count was profiled as a ~3.5 s job whose cost is FLAT in core
+    # count (driver/scheduling bound), i.e. pure scaling-efficiency loss.
+    df2 = df.withColumn(
+        "_salt",
+        F.when(F.col(order) < F.lit(cfg.salt_threshold), F.lit(0))
+         .otherwise(
+             (F.floor((F.col(order) - F.lit(cfg.salt_threshold))
+                      / F.lit(cfg.salt_block)) + 1).cast("int")))
+    # shuffle (and sort) on xxhash64(conv_id), one fixed-width 8-byte key,
+    # instead of the string conv_id: the Tungsten string-key sort was
+    # measured as the dominant non-scaling stage (BENCH/BASELINE.md
+    # round-2 profile: 0.74 at 2v8, memory-bus-bound); the sort prefix IS
+    # the whole primary key, so ordering never touches the string payload.
+    # A 64-bit hash collision only interleaves two conversations' rows
+    # inside one partition — decode order is restored from (conv_id,
+    # turn_idx), never from block order, so collisions cost a few bytes of
+    # RLE run length, NEVER correctness. Expected collisions at 10^12
+    # turns / ~10^10 convs: ~3 pairs.
+    df2 = df2.withColumn("_ck", F.xxhash64(F.col(conv)))
+    out = df2.repartition(cfg.n_partitions, F.col("_ck"), F.col("_salt"))
     if sort_within:
-        out = out.sortWithinPartitions(*cfg.sort_keys)
-    return out.drop("_skew", "_salt")
+        out = out.sortWithinPartitions(F.col("_ck"), F.col(order))
+    return out.drop("_salt", "_ck")
 
 
 def encode_table(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -637,27 +645,25 @@ def _encode_arranged(spark: SparkSession, df: DataFrame,
         "stats_version": STATS_VERSION,
     }
     meta.update(extra_meta or {})
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
 
     manifest = arranged.mapInArrow(
         _encoder(out_dir, cfg_hash, cfg.codec_overrides, cfg.chunk_rows,
                  entropy=cfg.entropy,
                  sort_keys=kernel_sort_keys,
-                 prefetch=cfg.prefetch_batches,
                  bloom_cols=cfg.bloom_cols, bloom_bits=cfg.bloom_bits,
                  bloom_hashes=cfg.bloom_hashes),
         schema=MANIFEST_SCHEMA)
     manifest.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
     out = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    _record_manifest_size(spark, out_dir, out, meta)
+    _record_manifest_size(out_dir, meta)
     return out
 
 
-def _record_manifest_size(spark: SparkSession, out_dir: str,
-                          manifest: DataFrame, meta: dict) -> None:
-    """Stamp the manifest's row/column counts into meta.json ONCE at
-    encode time, so every predicated decode can pick the set-path vs
+def _record_manifest_size(out_dir: str, meta: dict) -> None:
+    """Write meta.json, stamped with the manifest's row/column counts —
+    the only meta.json write of every encode and compaction, made once
+    the manifest is complete, so the stamp always describes the manifest
+    beside it. Every predicated decode can pick the set-path vs
     join-path pruning branch from metadata instead of running its own
     manifest aggregation job (a fixed Spark-job tax on the point-lookup
     hot path). Counts come from the parquet footers driver-side — no
@@ -785,6 +791,91 @@ def bucketize_table(spark: SparkSession, df: DataFrame, dest_dir: str,
     return dest_dir
 
 
+def _rewrite_buckets(spark: SparkSession, bucket_dir: str,
+                     upserts: DataFrame | None,
+                     del_keys: DataFrame | None) -> list[int]:
+    """The one bucket-maintenance pass behind upsert/delete/merge:
+    replace every conversation in `upserts` wholesale (insert if absent),
+    remove every conversation whose key is in `del_keys`, and rewrite
+    ONLY the bucket files those keys hash into — each read once, written
+    once, installed once (tmp + rename, per-bucket atomic, same semantics
+    as compaction). Returns the affected bucket ids: every bucket an
+    upsert routes to, plus each delete-routed bucket that exists on disk.
+
+    Routing reproduces Spark's repartition(n, col) assignment exactly:
+    HashPartitioning's partition id is pmod(murmur3(col), n), which is
+    pmod(F.hash(col), n) — so a change lands in the same bucket file
+    bucketize_table put its conversation in, keeping the
+    whole-conversation-per-file invariant encode_table_prebucketed needs.
+    A bucket left with no rows keeps an EMPTY parquet file (schema kept):
+    bucket ids are positional in encode_table_prebucketed's sorted path
+    list, so dropping a file would shift every later bucket's partition
+    id and invalidate their resume markers."""
+    import uuid as _uuid
+    import shutil
+    import pyarrow.parquet as pq
+    with open(os.path.join(bucket_dir, "_buckets.json")) as f:
+        bmeta = json.load(f)
+    n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
+    # hash on the TABLE's key type: murmur3(int32) != murmur3(int64), so
+    # keys that arrive narrower (e.g. literals) would route to the wrong
+    # bucket and the change would silently miss its target
+    key = F.col(conv_key).cast(
+        spark.read.parquet(bucket_dir).schema[conv_key].dataType)
+    if upserts is not None:
+        upserts = upserts.withColumn(conv_key, key)
+    if del_keys is not None:
+        del_keys = del_keys.select(key.alias(conv_key)).distinct()
+    bid = F.pmod(F.hash(F.col(conv_key)), F.lit(n)).alias("b")
+
+    def routed(frame: DataFrame | None) -> set[int]:
+        if frame is None:
+            return set()
+        return {r["b"] for r in frame.select(bid).distinct().collect()}
+
+    by_num = _part_files(bucket_dir, ".parquet")
+    ups_buckets = routed(upserts)
+    # a delete can only change buckets that exist on disk
+    affected = sorted(ups_buckets | (routed(del_keys) & by_num.keys()))
+    if not affected:
+        return []
+    old_files = [by_num[b] for b in affected if b in by_num]
+    touched_keys = reduce(DataFrame.unionByName,
+                          [fr.select(conv_key) for fr in (upserts, del_keys)
+                           if fr is not None]).distinct()
+    base = (spark.read.parquet(*old_files)
+            if old_files else upserts.limit(0))
+    merged = base.join(F.broadcast(touched_keys), conv_key, "left_anti")
+    if upserts is not None:
+        merged = merged.unionByName(upserts.select(*base.columns))
+    tmp = os.path.join(bucket_dir, f"_rewrite_tmp_{_uuid.uuid4().hex[:8]}")
+    # same repartition -> partition i == bucket i == tmp part file i.
+    # Spark may emit a part file for an EMPTY partition (part-00000 carries
+    # the schema) and none for other empty partitions — route on actual
+    # row count, never on file presence: installing an empty part-00000
+    # over bucket 0 was a silent data-loss bug (regression-tested)
+    merged.repartition(n, F.col(conv_key)).write.parquet(tmp)
+    filled = {b: p for b, p in _part_files(tmp, ".parquet").items()
+              if b in affected and pq.ParquetFile(p).metadata.num_rows > 0}
+    if not ups_buckets <= filled.keys():
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise RuntimeError(
+            f"upsert wrote no file for buckets {ups_buckets - filled.keys()}"
+            "; bucket dir left unchanged")
+    stamp = _uuid.uuid4().hex[:8]
+    for b in affected:
+        new = os.path.join(bucket_dir, _part_name(b, f"-rw{stamp}.parquet"))
+        if b in filled:
+            os.replace(filled[b], new)
+        else:
+            # emptied bucket (only deletes route here, so it is on disk)
+            pq.write_table(pq.read_schema(by_num[b]).empty_table(), new)
+        if b in by_num:
+            os.remove(by_num[b])
+    shutil.rmtree(tmp, ignore_errors=True)
+    return affected
+
+
 def upsert_bucketized(spark: SparkSession, updates: DataFrame,
                       bucket_dir: str) -> list[int]:
     """MERGE into a bucketize_table layout at bucket-file grain: every
@@ -793,78 +884,12 @@ def upsert_bucketized(spark: SparkSession, updates: DataFrame,
     whose hash bucket is touched are rewritten. Returns the affected
     bucket ids.
 
-    Routing reproduces Spark's repartition(n, col) assignment exactly:
-    HashPartitioning's partition id is pmod(murmur3(col), n), which is
-    pmod(F.hash(col), n) — so an update lands in the same bucket file
-    bucketize_table put its conversation in, keeping the
-    whole-conversation-per-file invariant encode_table_prebucketed
-    needs. A following encode_table_prebucketed run then re-encodes
-    ONLY the rewritten files (per-file fingerprints; untouched buckets
-    resume) — the incremental-maintenance path for a 10^12-turn
-    transcript table, where an upsert touching k conversations costs
-    O(k bucket files), not a table rewrite. File replacement is
-    per-bucket atomic (tmp + rename), same semantics as compaction."""
-    import re as _re
-    import uuid as _uuid
-    with open(os.path.join(bucket_dir, "_buckets.json")) as f:
-        bmeta = json.load(f)
-    n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
-    # hash on the TABLE's key type: murmur3(int32) != murmur3(int64), so
-    # an updates frame whose key column arrived narrower (e.g. literals)
-    # would route to the wrong bucket and silently miss the merge target
-    ktype = spark.read.parquet(bucket_dir).schema[conv_key].dataType
-    updates = updates.withColumn(conv_key, F.col(conv_key).cast(ktype))
-    bid = F.pmod(F.hash(F.col(conv_key)), F.lit(n))
-    affected = sorted(r["b"] for r in
-                      updates.select(bid.alias("b")).distinct().collect())
-    if not affected:
-        return []
-    by_num: dict[int, str] = {}
-    for p in os.listdir(bucket_dir):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if m:
-            by_num[int(m.group(1))] = os.path.join(bucket_dir, p)
-    old_files = [by_num[b] for b in affected if b in by_num]
-    upd_keys = updates.select(conv_key).distinct()
-    base = (spark.read.parquet(*old_files)
-            if old_files else updates.limit(0))
-    merged = (base.join(F.broadcast(upd_keys), conv_key, "left_anti")
-              .unionByName(updates.select(*base.columns)))
-    tmp = os.path.join(bucket_dir,
-                       f"_upsert_tmp_{_uuid.uuid4().hex[:8]}")
-    # same repartition → partition i == bucket i == tmp part-{i:05d} file
-    merged.repartition(n, F.col(conv_key)).write.parquet(tmp)
-    stamp = _uuid.uuid4().hex[:8]
-    affected_set = set(affected)
-    replaced = set()
-    for p in os.listdir(tmp):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if not m:
-            continue
-        b = int(m.group(1))
-        # ONLY touched buckets may be replaced: Spark writes a part-00000
-        # file even when partition 0 is EMPTY (it carries the schema), so
-        # installing every tmp file would overwrite bucket 0's data with
-        # an empty file whenever no update hashes there — silent data
-        # loss (caught by review; regression-tested)
-        if b not in affected_set:
-            continue
-        # keep the part-NNNNN prefix so the file holds its sorted
-        # position in encode_table_prebucketed's path list
-        os.replace(os.path.join(tmp, p),
-                   os.path.join(bucket_dir, f"part-{b:05d}-ups{stamp}"
-                                            ".parquet"))
-        old = by_num.get(b)
-        if old and os.path.exists(old):
-            os.remove(old)
-        replaced.add(b)
-    if replaced != affected_set:
-        raise RuntimeError(
-            f"upsert wrote no file for buckets {affected_set - replaced}; "
-            "bucket dir left partially updated")
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
-    return affected
+    A following encode_table_prebucketed run then re-encodes ONLY the
+    rewritten files (per-file fingerprints; untouched buckets resume) —
+    the incremental-maintenance path for a 10^12-turn transcript table,
+    where an upsert touching k conversations costs O(k bucket files), not
+    a table rewrite. Routing and atomicity: see _rewrite_buckets."""
+    return _rewrite_buckets(spark, bucket_dir, updates, None)
 
 
 def delete_bucketized(spark: SparkSession, keys: DataFrame,
@@ -875,71 +900,14 @@ def delete_bucketized(spark: SparkSession, keys: DataFrame,
     upsert_bucketized). Returns the affected bucket ids.
 
     A bucket whose every conversation is deleted is replaced by an EMPTY
-    parquet file (schema kept) rather than removed: bucket ids are
-    positional in encode_table_prebucketed's sorted path list, so
-    dropping a file would shift every later bucket's partition id and
-    invalidate their resume markers. The following
-    encode_table_prebucketed run re-encodes only the rewritten files;
-    an emptied bucket encodes to zero chunks and its stale block file is
-    unlinked (hardlinked snapshots keep the old bytes — see
+    parquet file (schema kept) so positional bucket ids stay stable. The
+    following encode_table_prebucketed run re-encodes only the rewritten
+    files; an emptied bucket encodes to zero chunks and its stale block
+    file is unlinked (hardlinked snapshots keep the old bytes — see
     snapshot_table). At 10^12-turn scale this is the GDPR-erasure /
     retention path: deleting k conversations costs O(k bucket files),
     not a table rewrite."""
-    import re as _re
-    import uuid as _uuid
-    import pyarrow.parquet as pq
-    with open(os.path.join(bucket_dir, "_buckets.json")) as f:
-        bmeta = json.load(f)
-    n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
-    # cast to the TABLE's key type before hashing — murmur3 differs by
-    # byte width, and delete keys often arrive as literals narrower than
-    # the stored column; a mismatch routes to the wrong bucket and the
-    # delete silently misses (caught in review of the upsert twin)
-    ktype = spark.read.parquet(bucket_dir).schema[conv_key].dataType
-    keys = keys.select(F.col(conv_key).cast(ktype).alias(conv_key)).distinct()
-    bid = F.pmod(F.hash(F.col(conv_key)), F.lit(n))
-    routed = sorted(r["b"] for r in
-                    keys.select(bid.alias("b")).distinct().collect())
-    by_num: dict[int, str] = {}
-    for p in os.listdir(bucket_dir):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if m:
-            by_num[int(m.group(1))] = os.path.join(bucket_dir, p)
-    # only buckets that exist on disk can hold rows to delete
-    affected = [b for b in routed if b in by_num]
-    if not affected:
-        return []
-    old_files = [by_num[b] for b in affected]
-    remaining = (spark.read.parquet(*old_files)
-                 .join(F.broadcast(keys), conv_key, "left_anti"))
-    tmp = os.path.join(bucket_dir, f"_delete_tmp_{_uuid.uuid4().hex[:8]}")
-    # same repartition -> partition i == bucket i == tmp part-{i:05d} file
-    remaining.repartition(n, F.col(conv_key)).write.parquet(tmp)
-    by_tmp: dict[int, str] = {}
-    for p in os.listdir(tmp):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if m:
-            by_tmp[int(m.group(1))] = os.path.join(tmp, p)
-    stamp = _uuid.uuid4().hex[:8]
-    for b in affected:
-        new = os.path.join(bucket_dir, f"part-{b:05d}-del{stamp}.parquet")
-        tf = by_tmp.get(b)
-        # Spark may emit a part file for an EMPTY partition (part-00000
-        # carries the schema) and emits none for other empty partitions —
-        # route on actual row count, not file presence (the upsert
-        # bucket-0 lesson)
-        if tf is not None and pq.ParquetFile(tf).metadata.num_rows > 0:
-            os.replace(tf, new)
-        else:
-            # fully-deleted bucket: keep an empty file so positional
-            # bucket ids stay stable for every OTHER bucket
-            pq.write_table(pq.read_schema(by_num[b]).empty_table(), new)
-        old = by_num[b]
-        if os.path.exists(old):
-            os.remove(old)
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
-    return affected
+    return _rewrite_buckets(spark, bucket_dir, None, keys)
 
 
 def merge_bucketized(spark: SparkSession, changes: DataFrame,
@@ -958,82 +926,20 @@ def merge_bucketized(spark: SparkSession, changes: DataFrame,
     Why one pass instead of delete_bucketized + upsert_bucketized:
     a bucket receiving both ops would be rewritten twice (two Spark
     jobs, two file replacements); here every affected bucket file is
-    read once, merged once, installed once (tmp + rename, same
-    atomicity as compaction). Routing is the shared pmod(murmur3, n)
-    invariant; emptied buckets keep an empty schema file so positional
-    bucket ids stay stable (the delete_bucketized lesson); only
-    affected buckets are touched so a k-conversation merge costs O(k
-    bucket files) at 10^12-turn scale, and the following
-    encode_table_prebucketed run re-encodes only those files.
+    read once, merged once, installed once. Only affected buckets are
+    touched, so a k-conversation merge costs O(k bucket files) at
+    10^12-turn scale, and the following encode_table_prebucketed run
+    re-encodes only those files.
     """
-    import re as _re
-    import uuid as _uuid
-    import pyarrow.parquet as pq
     ops = [r[0] for r in changes.select(op_col).distinct().collect()]
     bad = set(ops) - {"upsert", "delete"}
     if bad:
         raise ValueError(f"unknown merge op(s) {sorted(bad)}; "
                          "expected 'upsert' or 'delete'")
-    with open(os.path.join(bucket_dir, "_buckets.json")) as f:
-        bmeta = json.load(f)
-    n, conv_key = bmeta["n_buckets"], bmeta["conv_key"]
-    ktype = spark.read.parquet(bucket_dir).schema[conv_key].dataType
-    changes = changes.withColumn(conv_key, F.col(conv_key).cast(ktype))
-    upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
-    del_keys = (changes.filter(F.col(op_col) == "delete")
-                       .select(conv_key).distinct())
-    bid = F.pmod(F.hash(F.col(conv_key)), F.lit(n))
-    by_num: dict[int, str] = {}
-    for p in os.listdir(bucket_dir):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if m:
-            by_num[int(m.group(1))] = os.path.join(bucket_dir, p)
-    ups_buckets = {r["b"] for r in
-                   upserts.select(bid.alias("b")).distinct().collect()}
-    # delete-only buckets matter only if they exist on disk
-    del_buckets = {r["b"] for r in
-                   del_keys.select(bid.alias("b")).distinct().collect()
-                   if r["b"] in by_num}
-    affected = sorted(ups_buckets | del_buckets)
-    if not affected:
-        return []
-    old_files = [by_num[b] for b in affected if b in by_num]
-    touched_keys = (upserts.select(conv_key).unionByName(del_keys)
-                           .distinct())
-    base = (spark.read.parquet(*old_files)
-            if old_files else upserts.limit(0))
-    merged = (base.join(F.broadcast(touched_keys), conv_key, "left_anti")
-                  .unionByName(upserts.select(*base.columns)))
-    tmp = os.path.join(bucket_dir, f"_merge_tmp_{_uuid.uuid4().hex[:8]}")
-    # same repartition -> partition i == bucket i == tmp part-{i:05d}
-    merged.repartition(n, F.col(conv_key)).write.parquet(tmp)
-    by_tmp: dict[int, str] = {}
-    for p in os.listdir(tmp):
-        m = _re.match(r"part-(\d{5})-.*\.parquet$", p)
-        if m:
-            by_tmp[int(m.group(1))] = os.path.join(tmp, p)
-    stamp = _uuid.uuid4().hex[:8]
-    for b in affected:
-        new = os.path.join(bucket_dir, f"part-{b:05d}-mrg{stamp}.parquet")
-        tf = by_tmp.get(b)
-        has_rows = (tf is not None
-                    and pq.ParquetFile(tf).metadata.num_rows > 0)
-        if has_rows:
-            os.replace(tf, new)
-        elif b in by_num:
-            # bucket fully deleted: keep an empty schema file so
-            # positional bucket ids stay stable
-            pq.write_table(pq.read_schema(by_num[b]).empty_table(), new)
-        else:
-            # never existed and ends empty (delete of an absent key
-            # routed here alongside an upsert elsewhere): nothing to do
-            continue
-        old = by_num.get(b)
-        if old and os.path.exists(old):
-            os.remove(old)
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
-    return affected
+    return _rewrite_buckets(
+        spark, bucket_dir,
+        changes.filter(F.col(op_col) == "upsert").drop(op_col),
+        changes.filter(F.col(op_col) == "delete"))
 
 
 def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,
@@ -1056,9 +962,8 @@ def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,
     encode_table_prebucketed of dest_dir is a fresh encode by design.
 
     Mirrors bucketize_table's layout contract: files named
-    part-{id:05d}-*.parquet, ids positional in sorted order, empty new
-    buckets simply absent (same as a repartition write)."""
-    import re as _re
+    part-NNNNN-*.parquet (_part_name), ids positional in sorted order,
+    empty new buckets simply absent (same as a repartition write)."""
     import shutil
     import uuid as _uuid
     import pyarrow.parquet as _pq
@@ -1075,13 +980,13 @@ def rebucket_table(spark: SparkSession, bucket_dir: str, dest_dir: str,
        .write.partitionBy("__nb").parquet(tmp))
     stamp = _uuid.uuid4().hex[:8]
     for d in os.listdir(tmp):
-        mt = _re.match(r"__nb=(\d+)$", d)
+        mt = re.match(r"__nb=(\d+)$", d)
         if not mt:
             continue
         b = int(mt.group(1))
         files = sorted(p for p in os.listdir(os.path.join(tmp, d))
                        if p.endswith(".parquet"))
-        dest = os.path.join(dest_dir, f"part-{b:05d}-rbk{stamp}.parquet")
+        dest = os.path.join(dest_dir, _part_name(b, f"-rbk{stamp}.parquet"))
         if len(files) == 1:
             os.replace(os.path.join(tmp, d, files[0]), dest)
         elif files:
@@ -1237,8 +1142,7 @@ def _normalize_arrow_units(tbl: pa.Table) -> pa.Table:
 
 def encode_table_prebucketed(spark: SparkSession, input_dir: str,
                              out_dir: str, cfg: EncodeConfig | None = None,
-                             fingerprint: str = "",
-                             per_file_fingerprint: bool = True) -> DataFrame:
+                             fingerprint: str = "") -> DataFrame:
     """Shuffle-free encode over a PRE-BUCKETED parquet layout: one task
     per bucket file; the kernel reads its file in-process with pyarrow,
     sorts by sort_keys (Arrow C++ sort_indices), and encodes — no JVM
@@ -1257,17 +1161,17 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     (same markers as the shuffle path); blocks, manifest, zone maps and
     blooms are byte-compatible with decode_table.
 
-    per_file_fingerprint=True (default) keys each file's resume marker by
-    (config, file name, size, mtime) instead of one whole-input
-    fingerprint — INCREMENTAL ENCODE: when the bucketed table grows,
-    re-running encodes only the new/changed bucket files and resumes
-    every untouched one. Assumes an append-only layout (existing files
-    keep their sorted position; new files sort after them, as Spark
+    Each file's resume marker is keyed by (config, file name, size,
+    mtime) instead of one whole-input fingerprint — INCREMENTAL ENCODE:
+    when the bucketed table grows, re-running encodes only the
+    new/changed bucket files and resumes every untouched one. Assumes an
+    append-only layout (existing files keep their position in
+    _bucket_sort_key order; new files sort after them, as Spark
     part-file naming does) — if files are renamed or reordered, use a
     fresh out_dir."""
     cfg = cfg or EncodeConfig()
-    paths = sorted(os.path.join(input_dir, p) for p in os.listdir(input_dir)
-                   if p.endswith(".parquet"))
+    paths = sorted((os.path.join(input_dir, p) for p in os.listdir(input_dir)
+                    if p.endswith(".parquet")), key=_bucket_sort_key)
     if not paths:
         raise ValueError(f"no .parquet bucket files under {input_dir}")
     schema = spark.read.parquet(input_dir).schema
@@ -1288,22 +1192,18 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
         "prebucketed": True,
         "stats_version": STATS_VERSION,
     }
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
 
     idx = {p: i for i, p in enumerate(paths)}
-    if per_file_fingerprint:
-        def _ffp(p):
-            st = os.stat(p)
-            # nanosecond mtime: a bucket file rewritten within the same
-            # second with unchanged size (deterministic re-bucketize)
-            # must NOT resume stale blocks
-            blob = (f"{cfg_hash}:{os.path.basename(p)}:{st.st_size}:"
-                    f"{st.st_mtime_ns}").encode()
-            return hashlib.md5(blob).hexdigest()[:12]
-        fps = {p: _ffp(p) for p in paths}
-    else:
-        fps = {p: cfg_hash for p in paths}
+
+    def _ffp(p):
+        st = os.stat(p)
+        # nanosecond mtime: a bucket file rewritten within the same
+        # second with unchanged size (deterministic re-bucketize)
+        # must NOT resume stale blocks
+        blob = (f"{cfg_hash}:{os.path.basename(p)}:{st.st_size}:"
+                f"{st.st_mtime_ns}").encode()
+        return hashlib.md5(blob).hexdigest()[:12]
+    fps = {p: _ffp(p) for p in paths}
     overrides, chunk_rows = cfg.codec_overrides, cfg.chunk_rows
     entropy, sort_keys = cfg.entropy, cfg.sort_keys
     bloom_cols, bloom_bits = cfg.bloom_cols, cfg.bloom_bits
@@ -1343,7 +1243,7 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     manifest = pdf.mapInArrow(run, schema=MANIFEST_SCHEMA)
     manifest.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
     out = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    _record_manifest_size(spark, out_dir, out, meta)
+    _record_manifest_size(out_dir, meta)
     return out
 
 
@@ -1366,7 +1266,6 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
     merged table reads through decode_table like any encode_table
     output. Distributed: one task per output file; the driver only
     handles the O(#files) grouping metadata."""
-    import glob
     metas = []
     for d in src_dirs:
         with open(os.path.join(d, "meta.json")) as f:
@@ -1396,8 +1295,8 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
         counts = {int(r["partition_id"]): int(r["n"]) for r in
                   (man.groupBy("partition_id")
                       .agg((F.max("chunk_id") + 1).alias("n")).collect())}
-        for p in sorted(glob.glob(os.path.join(d, "blocks", "*.ssb"))):
-            pid = int(os.path.basename(p)[5:10])
+        for pid, p in sorted(_part_files(os.path.join(d, "blocks"),
+                                         ".ssb").items()):
             entries.append((d, pid, p, counts.get(pid, 0)))
     if not entries:
         raise ValueError("no block files under src_dirs")
@@ -1412,8 +1311,6 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
     # a compaction mixing any pre-upgrade source inherits the weakest
     # stats contract — datetime zone pruning then stays disabled for it
     meta["stats_version"] = min(m.get("stats_version", 0) for m in metas)
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
 
     blk_dir = os.path.join(out_dir, "blocks")
 
@@ -1421,7 +1318,7 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
         for batch in batches:
             for gid, paths_json in zip(batch.column(0).to_pylist(),
                                        batch.column(1).to_pylist()):
-                dst = os.path.join(blk_dir, f"part-{gid:05d}.ssb")
+                dst = os.path.join(blk_dir, _part_name(gid, ".ssb"))
                 tmp = dst + ".tmp"
                 with open(tmp, "wb") as out:
                     for p in json.loads(paths_json):
@@ -1465,6 +1362,7 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
                            + F.col("chunk_off"))
                .drop("src_dir", "new_pid", "chunk_off"))
     out_man.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
+    _record_manifest_size(out_dir, meta)
     return spark.read.parquet(os.path.join(out_dir, "manifest"))
 
 
@@ -1802,7 +1700,6 @@ def _pruned_chunks_df(spark: SparkSession, out_dir: str,
     partition_id, so a partition pruned to zero chunks never even
     schedules a task. Returns (partition_id int, wanted array<int>), or
     None when stats are unusable (decode everything)."""
-    from functools import reduce
     sels = _pred_survivor_dfs(spark, out_dir, predicates)
     if sels is None:
         return None
@@ -1865,34 +1762,22 @@ def decode_table(spark: SparkSession, out_dir: str,
     keep: dict[int, set] | None = None
     wanted_df = None
     if predicates:
-        mdir = os.path.join(out_dir, "manifest")
-        big = False
-        if os.path.isdir(mdir):
-            if "manifest_rows" in meta:
-                # stamped at encode time: no Spark job on the hot path
-                big = (meta["manifest_rows"]
-                       // max(meta.get("manifest_columns", 1), 1)
-                       ) > join_prune_threshold
-            else:  # pre-stamp manifest: measure once per decode
-                r = (spark.read.parquet(mdir)
-                     .agg(F.count("*").alias("n"),
-                          F.countDistinct("column").alias("c"))
-                     .collect()[0])
-                big = (r["n"] // max(r["c"], 1)) > join_prune_threshold
+        # chunk count stamped at encode time (_record_manifest_size): no
+        # Spark job on the hot path; an unstamped table takes the set path
+        big = (meta.get("manifest_rows", 0)
+               // max(meta.get("manifest_columns", 1), 1)
+               ) > join_prune_threshold
         if big:
             wanted_df = _pruned_chunks_df(spark, out_dir, predicates)
         else:
             keep = _pruned_chunks(spark, out_dir, predicates)
-    blk_dir = os.path.join(out_dir, "blocks")
-    paths = (sorted(os.path.join(blk_dir, p) for p in os.listdir(blk_dir)
-                    if p.endswith(".ssb"))
-             if os.path.isdir(blk_dir) else [])
+    blocks = sorted(_part_files(os.path.join(out_dir, "blocks"),
+                                ".ssb").items())
     if partitions is not None:
         # partition-subset decode (snapshot_diff's CDC path): only the
         # named partitions' block files are read at all
         want_p = set(partitions)
-        paths = [p for p in paths
-                 if int(os.path.basename(p)[5:10]) in want_p]
+        blocks = [(pid, p) for pid, p in blocks if pid in want_p]
 
     # kernel-safe predicates: int/string bounds are exact in Arrow (same
     # binary/UTF-8 order as Spark), so they can be evaluated INSIDE the
@@ -1943,14 +1828,12 @@ def decode_table(spark: SparkSession, out_dir: str,
 
         for batch in batches:
             # join-path pruning ships each task's surviving chunk ids as a
-            # 4th column; the small-manifest path closes over `keep`
-            wlists = (batch.column(3).to_pylist()
-                      if batch.num_columns > 3 else None)
-            for i, (path, lo_c, hi_c) in enumerate(
-                    zip(batch.column(0).to_pylist(),
-                        batch.column(1).to_pylist(),
-                        batch.column(2).to_pylist())):
-                pid = int(os.path.basename(path)[5:10])
+            # `wanted` column; the small-manifest path closes over `keep`
+            wlists = (batch.column("wanted").to_pylist()
+                      if "wanted" in batch.schema.names else None)
+            for i, (path, pid, lo_c, hi_c) in enumerate(
+                    zip(*(batch.column(c).to_pylist() for c in
+                          ("path", "partition_id", "lo", "hi")))):
                 if wlists is not None:
                     wanted = set(wlists[i]) if wlists[i] is not None else None
                 else:
@@ -1993,12 +1876,12 @@ def decode_table(spark: SparkSession, out_dir: str,
                     chunk_id += 1
                     yield from conform(tbl).to_batches()
 
-    if not paths:
+    if not blocks:
         out = spark.createDataFrame([], schema)
     else:
         par = spark.sparkContext.defaultParallelism
-        ranges = [(p, 0, 1 << 30) for p in paths]
-        if len(paths) < par:
+        ranges = [(p, pid, 0, 1 << 30) for pid, p in blocks]
+        if len(blocks) < par:
             # few big files (post-compaction) would serialize decode on
             # one task each — split into chunk ranges so every core gets
             # work. Range tasks walk headers to their start (cheap) and
@@ -2010,31 +1893,26 @@ def decode_table(spark: SparkSession, out_dir: str,
                        .agg((F.max("chunk_id") + 1).alias("n")).collect()}
                 total = sum(cnt.values())
                 if total:
-                    step = max(1, total // max(2 * par, len(paths)))
+                    step = max(1, total // max(2 * par, len(blocks)))
                     ranges = []
-                    for p in paths:
-                        n = cnt.get(int(os.path.basename(p)[5:10]))
+                    for pid, p in blocks:
+                        n = cnt.get(pid)
                         if not n:
-                            ranges.append((p, 0, 1 << 30))
+                            ranges.append((p, pid, 0, 1 << 30))
                             continue
                         for s in range(0, n, step):
-                            ranges.append((p, s, min(s + step, n)))
+                            ranges.append((p, pid, s, min(s + step, n)))
         pdf = spark.createDataFrame(
             spark.sparkContext.parallelize(ranges, numSlices=len(ranges)),
-            schema="path string, lo int, hi int")
+            schema="path string, partition_id int, lo int, hi int")
         if wanted_df is not None:
             # distributed pruning: inner-join the task list against the
-            # surviving-chunk arrays on the partition id parsed from the
-            # file name — fully-pruned partitions drop out of the task
-            # list here, before any task is scheduled
-            pid_expr = F.substring(
-                F.element_at(F.split(F.col("path"), "/"), -1),
-                6, 5).cast("int")
-            # no forced broadcast: AQE picks one when the survivor side is
-            # small; at extreme chunk counts the arrays stay executor-side
-            pdf = (pdf.withColumn("partition_id", pid_expr)
-                   .join(wanted_df, "partition_id")
-                   .select("path", "lo", "hi", "wanted"))
+            # surviving-chunk arrays on partition_id — fully-pruned
+            # partitions drop out of the task list here, before any task
+            # is scheduled. No forced broadcast: AQE picks one when the
+            # survivor side is small; at extreme chunk counts the arrays
+            # stay executor-side
+            pdf = pdf.join(wanted_df, "partition_id")
         out = pdf.mapInArrow(decode, schema=schema)
     import datetime as _dt
     ntz = {f.name for f in schema.fields
@@ -2124,17 +2002,16 @@ def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
     manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
     expected = (manifest.select("partition_id", "chunk_id", "crc32")
                 .distinct())
-    blk_dir = os.path.join(out_dir, "blocks")
-    paths = (sorted(os.path.join(blk_dir, p) for p in os.listdir(blk_dir)
-                    if p.endswith(".ssb")) if os.path.isdir(blk_dir) else [])
+    blocks = sorted(_part_files(os.path.join(out_dir, "blocks"),
+                                ".ssb").items())
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .runtime import pin_worker_threads
         pin_worker_threads()
         from .codecs import block_span
         for batch in batches:
-            for path in batch.column(0).to_pylist():
-                pid = int(os.path.basename(path)[5:10])
+            for path, pid in zip(batch.column("path").to_pylist(),
+                                 batch.column("partition_id").to_pylist()):
                 with open(path, "rb") as f:
                     buf = f.read()
                 off, chunk_id = 0, 0
@@ -2156,12 +2033,13 @@ def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:
                     "crc_actual": pa.array(crcs, pa.int64()),
                 })
 
-    if not paths:
+    if not blocks:
         actual = spark.createDataFrame(
             [], "partition_id int, chunk_id int, crc_actual long")
     else:
-        pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-        actual = pdf.repartition(len(paths), "path").mapInArrow(
+        pdf = spark.createDataFrame([(p, pid) for pid, p in blocks],
+                                    "path string, partition_id int")
+        actual = pdf.repartition(len(blocks), "path").mapInArrow(
             scan, schema="partition_id int, chunk_id int, crc_actual long")
     joined = expected.withColumnRenamed("crc32", "crc_expected") \
         .join(actual, ["partition_id", "chunk_id"], "full_outer")

@@ -170,3 +170,81 @@ def test_manifest_summary(spark, small_df, tmp_path):
     assert all(r.ratio is not None and r.bytes_out > 0 for r in rows)
     text_rows = [r for r in rows if r.column == "text"]
     assert all(r.ratio < 1.0 for r in text_rows)
+
+
+def test_part_file_naming():
+    from supersonic_spark.pipeline import (_bucket_sort_key, _part_id,
+                                           _part_name)
+    spark_file = ("part-00003-8f1c2b6e-0d4a-4c1e-9f7e-1a2b3c4d5e6f"
+                  "-c000.snappy.parquet")
+    assert _part_id("/t/buckets/" + spark_file) == 3
+    assert _part_name(100000, "-rw1a2b3c4d.parquet") == \
+        "part-100000-rw1a2b3c4d.parquet"
+    assert _part_id("part-100000-rw1a2b3c4d.parquet") == 100000
+    assert _part_id(_part_name(7, ".ssb")) == 7
+    assert _part_id("_buckets.json") is None
+    names = ["part-100000-a.parquet", "part-99999-b.parquet", spark_file]
+    assert sorted(names, key=_bucket_sort_key) == [
+        spark_file, "part-99999-b.parquet", "part-100000-a.parquet"]
+    # names without a part id keep lexical order
+    plain = ["bucket-900.parquet", "bucket-000.parquet", "bucket-010.parquet"]
+    assert sorted(plain, key=_bucket_sort_key) == sorted(plain)
+
+
+def test_partition_ids_at_100000(spark, tmp_path):
+    """A six-digit partition id parses as itself on every read path:
+    pruned decode (set and join paths), partition-subset decode and the
+    block audit."""
+    import pyarrow.parquet as pq
+    from supersonic_spark.pipeline import validate_blocks
+    df = generate_transcripts(spark, n_convs=30, seed=3, mega_every=0)
+    out = str(tmp_path / "enc_pid")
+    encode_table(spark, df, out, EncodeConfig(n_partitions=1, chunk_rows=64),
+                 fingerprint="pid")
+    blk = os.path.join(out, "blocks")
+    os.rename(os.path.join(blk, "part-00000.ssb"),
+              os.path.join(blk, "part-100000.ssb"))
+    mdir = os.path.join(out, "manifest")
+    man = pq.read_table(mdir)
+    i = man.schema.get_field_index("partition_id")
+    man = man.set_column(i, man.schema.field(i),
+                         pa.array([100000] * man.num_rows, pa.int32()))
+    shutil.rmtree(mdir)
+    os.makedirs(mdir)
+    pq.write_table(man, os.path.join(mdir, "part-0.parquet"))
+
+    def keys(d):
+        return sorted((r.conv_id, r.turn_idx) for r in
+                      d.select("conv_id", "turn_idx").collect())
+
+    pred = ("turn_idx", 2, 5)
+    want = keys(df.filter(F.col("turn_idx").between(2, 5)))
+    assert want
+    assert keys(decode_table(spark, out, predicate=pred)) == want
+    assert keys(decode_table(spark, out, predicate=pred,
+                             join_prune_threshold=0)) == want
+    assert keys(decode_table(spark, out, partitions=[100000])) == keys(df)
+    audit = validate_blocks(spark, out).collect()
+    assert len(audit) == man.num_rows // len(df.columns)
+    assert all(r.ok and r.partition_id == 100000 for r in audit)
+
+
+def test_compact_restamps_manifest_size(spark, tmp_path):
+    """The merged meta.json carries the merged manifest's row count, not
+    the first source's."""
+    import pyarrow.parquet as pq
+    from supersonic_spark.pipeline import compact_blocks
+    srcs = []
+    for i, n_convs in enumerate((20, 35)):
+        d = str(tmp_path / f"src{i}")
+        encode_table(spark, generate_transcripts(spark, n_convs, seed=i,
+                                                 mega_every=0),
+                     d, EncodeConfig(n_partitions=2, chunk_rows=128),
+                     fingerprint=f"src{i}")
+        srcs.append(d)
+    out = str(tmp_path / "compacted")
+    compact_blocks(spark, srcs, out)
+    with open(os.path.join(out, "meta.json")) as f:
+        meta = json.load(f)
+    assert meta["manifest_rows"] == \
+        pq.read_table(os.path.join(out, "manifest")).num_rows

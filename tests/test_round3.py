@@ -342,22 +342,14 @@ def test_decode_table_string_predicate(spark, tmp_path):
 
 # --- encode prefetch --------------------------------------------------------
 
-def test_prefetch_encode_identical_output(spark, tmp_path):
-    import glob
-    from supersonic_spark.datagen import generate_transcripts
-    from supersonic_spark.pipeline import EncodeConfig, encode_table
-    df = generate_transcripts(spark, n_convs=40, seed=5)
-    outs = {}
-    for depth in (0, 2):
-        d = str(tmp_path / f"p{depth}")
-        encode_table(spark, df, d,
-                     EncodeConfig(n_partitions=3, prefetch_batches=depth),
-                     fingerprint=f"pf{depth}")
-        outs[depth] = {
-            # same block bytes regardless of prefetch: order-preserving
-            os.path.basename(p): open(p, "rb").read()
-            for p in glob.glob(d + "/blocks/*.ssb")}
-    assert outs[0] == outs[2] and outs[0]
+def test_prefetch_yields_input_batches_in_order():
+    import pyarrow as pa
+    from supersonic_spark.pipeline import _prefetched
+    batches = [pa.record_batch({"i": list(range(k, k + 3))})
+               for k in range(0, 30, 3)]
+    out = list(_prefetched(iter(batches)))
+    assert len(out) == len(batches)
+    assert all(a is b for a, b in zip(out, batches))
 
 
 def test_prefetched_propagates_reader_errors():
@@ -557,7 +549,6 @@ def test_row_local_salt_splits_only_mega_tails(spark):
     rows += [("mega", i, f"m{i}") for i in range(300)]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     cfg = EncodeConfig(n_partitions=4, salt_threshold=100, salt_block=64)
-    assert cfg.skew_precount is False
     arr = salted_repartition(df, cfg)
     pid = (arr.withColumn("_p", F.spark_partition_id())
            .groupBy("conv_id").agg(F.countDistinct("_p").alias("np")))

@@ -29,12 +29,6 @@ def main():
     ap.add_argument("--sort-in-kernel", action="store_true",
                     help="partition sort inside the Arrow kernel instead of "
                          "JVM sortWithinPartitions (see EncodeConfig)")
-    ap.add_argument("--string-sort-key", action="store_true",
-                    help="disable the fixed-width xxhash64 shuffle/sort key "
-                         "(A/B baseline: sort on the string conv_id)")
-    ap.add_argument("--no-prefetch", action="store_true",
-                    help="disable the IPC/compute prefetch overlap in the "
-                         "encode kernel (A/B baseline)")
     ap.add_argument("--prebucketed", action="store_true",
                     help="input dir is a bucketize_table() layout (one "
                          "bucket file per hash(conv_id) slice): encode "
@@ -71,9 +65,7 @@ def main():
 
     cfg = EncodeConfig(n_partitions=args.n_partitions or 2 * cores,
                        chunk_rows=args.chunk_rows,
-                       sort_in_kernel=args.sort_in_kernel,
-                       fixed_width_shuffle_key=not args.string_sort_key,
-                       prefetch_batches=0 if args.no_prefetch else 2)
+                       sort_in_kernel=args.sort_in_kernel)
     def encode(dest, fp):
         if args.prebucketed:
             return encode_table_prebucketed(spark, args.input, dest, cfg,
