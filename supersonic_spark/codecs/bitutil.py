@@ -155,8 +155,8 @@ def pack_ints_block(vals: np.ndarray) -> bytes:
     memory-bandwidth consumer.
 
     width >= 8 payloads use the byte-sliced layout (same size, far less
-    memory traffic) and mark it with the width byte's high bit so old
-    blocks remain self-describing and decodable.
+    memory traffic) and mark it with the width byte's high bit (see
+    split_width_byte).
     """
     v = np.ascontiguousarray(vals)
     n = len(v)
@@ -177,17 +177,25 @@ def pack_ints_block(vals: np.ndarray) -> bytes:
     return _I64.pack(ref) + _U64.pack(n) + bytes([width]) + pack_uints(deltas, width)
 
 
+def split_width_byte(wbyte: int) -> tuple[int, bool]:
+    """(width, sliced) of a packed-ints width byte. Widths >= 8 use the
+    byte-sliced layout and carry the high bit (0x80); narrower widths use
+    pack_uints and must not. Any other byte raises ValueError."""
+    width = wbyte & 0x7F
+    sliced = width >= 8
+    if bool(wbyte & 0x80) != sliced:
+        raise ValueError(f"bad bit-pack width byte 0x{wbyte:02x}: the "
+                         "sliced-layout bit must be set iff width >= 8")
+    return width, sliced
+
+
 def unpack_ints_block(buf: bytes, offset: int = 0) -> tuple[np.ndarray, int]:
     """Inverse of pack_ints_block. Returns (int64 array, bytes consumed)."""
     ref = _I64.unpack_from(buf, offset)[0]
     n = _U64.unpack_from(buf, offset + 8)[0]
-    wbyte = buf[offset + 16]
-    sliced = bool(wbyte & 0x80)
-    width = wbyte & 0x7F
-    nbytes = (n * width + 7) // 8
-    if sliced:
-        k, r = divmod(width, 8)
-        nbytes = k * n + (n * r + 7) // 8
+    width, sliced = split_width_byte(buf[offset + 16])
+    k, r = divmod(width, 8)
+    nbytes = k * n + (n * r + 7) // 8
     payload = buf[offset + 17 : offset + 17 + nbytes]
     un = unpack_uints_sliced if sliced else unpack_uints
     vals = un(payload, n, width).view(np.int64) + ref

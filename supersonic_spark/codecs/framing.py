@@ -1,7 +1,7 @@
 """Self-describing encoded column / block framing.
 
 A column chunk frames as:
-    [b"SC"][u8 version=1][u8 typecode][u8 codec_id][u8 flags]
+    [b"SC"][u8 version=2][u8 typecode][u8 codec_id][u8 flags]
     [u64 row_count]
     [validity bitmap, ceil(n/8) bytes, iff flags&1]     (1 = valid, Arrow-style)
     [u64 payload_len][payload]
@@ -38,12 +38,9 @@ _U16 = struct.Struct("<H")
 
 _MAGIC_COL = b"SC"
 _MAGIC_BLOCK = b"SSBK"
-# v1: codec payloads only; v2 adds the optional entropy outer stage
-# (flags&2). Writers emit v2; decoders accept both, so pre-entropy frames
-# stay readable and a v1-only decoder rejects v2 frames cleanly instead of
-# misreading a staged payload.
+# v2 = codec payload plus the optional entropy outer stage (flags&2); the
+# only version written and read — any other version raises ValueError
 _VERSION = 2
-_DECODABLE_VERSIONS = (1, 2)
 _FLAG_HAS_NULLS = 1
 _FLAG_ENTROPY = 2
 _KNOWN_FLAGS = _FLAG_HAS_NULLS | _FLAG_ENTROPY
@@ -70,6 +67,14 @@ def entropy_compress(payload: bytes, entropy: str) -> bytes | None:
     if len(comp) + 9 >= _ENTROPY_KEEP * len(payload):
         return None
     return bytes([ENTROPY_IDS[entropy]]) + _U64.pack(len(payload)) + comp
+
+
+def _entropy_name(backend_id: int) -> str:
+    """Entropy backend name of a frame's backend id byte."""
+    try:
+        return ENTROPY_NAMES[backend_id]
+    except KeyError:
+        raise ValueError(f"unknown entropy backend id {backend_id}") from None
 
 
 def validate_entropy(entropy: str | None) -> None:
@@ -115,7 +120,7 @@ def decode_column(buf: bytes, offset: int = 0) -> tuple[pa.Array, int]:
     if buf[offset:offset + 2] != _MAGIC_COL:
         raise ValueError("bad column magic")
     version, typecode, codec_id, flags = buf[offset + 2:offset + 6]
-    if version not in _DECODABLE_VERSIONS:
+    if version != _VERSION:
         raise ValueError(f"unsupported column frame version {version}")
     if flags & ~_KNOWN_FLAGS:
         raise ValueError(f"unknown column frame flags 0x{flags:02x}")
@@ -134,7 +139,7 @@ def decode_column(buf: bytes, offset: int = 0) -> tuple[pa.Array, int]:
     off += payload_len
     if flags & _FLAG_ENTROPY:
         raw_len = _U64.unpack_from(payload, 1)[0]
-        payload = _entropy_codec(ENTROPY_NAMES[payload[0]]).decompress(
+        payload = _entropy_codec(_entropy_name(payload[0])).decompress(
             payload[9:], raw_len, asbytes=True)
     n_dense = n if valid is None else int(valid.sum())
     dense = decode_values(payload, n_dense, codec_id, typecode)
@@ -164,6 +169,32 @@ def encode_block(batch: pa.RecordBatch | pa.Table, codecs: dict[str, str],
     return bytes(out)
 
 
+def _block_columns(buf: bytes, offset: int = 0
+                   ) -> tuple[list[tuple[str, int, int]], int]:
+    """Walk the per-column length headers of the block frame at `offset`
+    without touching any payload: ([(name, frame offset, frame length)],
+    end offset of the block). The one reader of the block header layout."""
+    if buf[offset:offset + 4] != _MAGIC_BLOCK:
+        raise ValueError("bad block magic")
+    n_cols = _U16.unpack_from(buf, offset + 4)[0]
+    off = offset + 14  # skip row_count (redundant with column frames)
+    cols = []
+    for _ in range(n_cols):
+        if off + 10 > len(buf):
+            raise ValueError("truncated block frame")
+        nlen = _U16.unpack_from(buf, off)[0]
+        off += 2
+        name = buf[off:off + nlen].decode("utf-8")
+        off += nlen
+        clen = _U64.unpack_from(buf, off)[0]
+        off += 8
+        cols.append((name, off, clen))
+        off += clen
+    if off > len(buf):
+        raise ValueError("truncated block frame")
+    return cols, off
+
+
 def decode_block(buf: bytes, offset: int = 0,
                  columns: list[str] | None = None,
                  missing_ok: bool = False) -> tuple[pa.Table, int]:
@@ -177,66 +208,40 @@ def decode_block(buf: bytes, offset: int = 0,
     the additive-schema-evolution read path (blocks encoded before a
     column existed; the caller fills NULLs). Bytes consumed always
     covers the whole block."""
-    if buf[offset:offset + 4] != _MAGIC_BLOCK:
-        raise ValueError("bad block magic")
-    n_cols = _U16.unpack_from(buf, offset + 4)[0]
-    off = offset + 6 + 8  # skip row_count (redundant with column frames)
+    cols, end = _block_columns(buf, offset)
     wanted = None if columns is None else set(columns)
     names, arrays = [], []
-    for _ in range(n_cols):
-        nlen = _U16.unpack_from(buf, off)[0]
-        off += 2
-        name = buf[off:off + nlen].decode("utf-8")
-        off += nlen
-        clen = _U64.unpack_from(buf, off)[0]
-        off += 8
+    for name, off, clen in cols:
         if wanted is None or name in wanted:
             arr, used = decode_column(buf, off)
-            assert used == clen, f"column frame length mismatch for {name}"
+            if used != clen:
+                raise ValueError(f"column frame length mismatch for {name}")
             names.append(name)
             arrays.append(arr)
-        off += clen
     if wanted is not None and len(names) < len(wanted) and not missing_ok:
         missing = sorted(wanted - set(names))
         raise KeyError(f"columns {missing} not present in block")
-    return pa.table(dict(zip(names, arrays))), off - offset
+    return pa.table(dict(zip(names, arrays))), end - offset
 
 
 def block_span(buf: bytes, offset: int = 0) -> int:
     """Total byte length of the block frame at `offset`, found by walking
     the per-column length headers only — the cheap skip used by chunk
     pruning (zone maps) and the crc audit."""
-    if buf[offset:offset + 4] != _MAGIC_BLOCK:
-        raise ValueError("bad block magic")
-    n_cols = _U16.unpack_from(buf, offset + 4)[0]
-    off = offset + 14
-    for _ in range(n_cols):
-        nlen = _U16.unpack_from(buf, off)[0]
-        off += 2 + nlen
-        clen = _U64.unpack_from(buf, off)[0]
-        off += 8 + clen
-    return off - offset
+    return _block_columns(buf, offset)[1] - offset
 
 
-def block_codec_report(buf: bytes, offset: int = 0) -> dict[str, str]:
-    """Which codec each column of a block used (for lineage/manifest);
-    entropy-staged frames report as e.g. "tokdict+zstd"."""
-    n_cols = _U16.unpack_from(buf, offset + 4)[0]
-    off = offset + 14
+def block_codec_report(buf: bytes, offset: int = 0
+                       ) -> dict[str, tuple[str, int]]:
+    """{column: (codec, frame bytes)} of a block, for lineage/manifest;
+    entropy-staged frames report their codec as e.g. "tokdict+zstd"."""
     report = {}
-    for _ in range(n_cols):
-        nlen = _U16.unpack_from(buf, off)[0]
-        off += 2
-        name = buf[off:off + nlen].decode("utf-8")
-        off += nlen
-        clen = _U64.unpack_from(buf, off)[0]
-        off += 8
+    for name, off, clen in _block_columns(buf, offset)[0]:
         codec = CODEC_NAMES[buf[off + 4]]
         flags = buf[off + 5]
         if flags & _FLAG_ENTROPY:
             n = _U64.unpack_from(buf, off + 6)[0]
             pstart = off + 14 + ((n + 7) // 8 if flags & _FLAG_HAS_NULLS else 0) + 8
-            codec = f"{codec}+{ENTROPY_NAMES[buf[pstart]]}"
-        report[name] = codec
-        off += clen
+            codec = f"{codec}+{_entropy_name(buf[pstart])}"
+        report[name] = (codec, clen)
     return report

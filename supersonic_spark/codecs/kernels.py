@@ -24,7 +24,8 @@ import pyarrow as pa
 
 from .bitutil import (pack_ints_block, unpack_ints_block, zigzag_decode,
                       zigzag_encode, bit_width, pack_uints, unpack_uints,
-                      pack_uints_sliced, unpack_uints_sliced)
+                      pack_uints_sliced, unpack_uints_sliced,
+                      split_width_byte)
 from .reference_layout import _concat_data, _varlen_lengths
 
 _U64 = struct.Struct("<Q")
@@ -296,8 +297,7 @@ def encode_pfor_delta(arr: pa.Array, typecode: int) -> bytes:
     exc_val = zz[exc].view(np.int64)
     packed_vals = np.where(exc, np.uint64(0), zz)
     # width byte's high bit marks the byte-sliced layout (same size,
-    # far less memory traffic; see bitutil.pack_uints_sliced) — old
-    # frames keep decoding through the container path
+    # far less memory traffic; see bitutil.split_width_byte)
     if width >= 8:
         payload = pack_uints_sliced(packed_vals, width)
         wbyte = width | 0x80
@@ -318,12 +318,11 @@ def decode_pfor_delta(buf: bytes, n: int, typecode: int) -> pa.Array:
         return _from_numpy(np.zeros(0, dtype=np.int64), typecode)
     if n_stored == 1:
         return _from_numpy(np.array([first], dtype=np.int64), typecode)
-    wbyte = buf[16]
-    width = wbyte & 0x7F
+    width, sliced = split_width_byte(buf[16])
     off = 17
     plen = _U64.unpack_from(buf, off)[0]
     off += 8
-    un = unpack_uints_sliced if (wbyte & 0x80) else unpack_uints
+    un = unpack_uints_sliced if sliced else unpack_uints
     zz = un(buf[off:off + plen], n_stored - 1, width)
     off += plen
     pos_len = _U64.unpack_from(buf, off)[0]

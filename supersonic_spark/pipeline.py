@@ -1,7 +1,7 @@
 """Distributed encode/decode pipeline.
 
-Encode: repartition by (conv_id, salt) — salting splits skewed
-mega-conversations — sort within partitions by (conv_id, turn_idx), then a
+Encode: repartition by (xxhash64(conv_id), salt) — salting splits skewed
+mega-conversations — sort within partitions by (conv hash, turn_idx), then a
 mapInArrow kernel encodes 64k-row chunks per column (selector-chosen codec)
 into block files, emitting lineage/metrics manifest rows and per-partition
 checkpoint markers so a killed job resumes without re-encoding completed
@@ -14,9 +14,9 @@ external sort are the checkpoint precedent (reference:
 supersonic/cursor/core/sort.cc:324-366); Spy/benchmark listeners are the
 per-operator metrics precedent (reference: supersonic/cursor/core/spy.h:36-57).
 
-At 100 TB scale the only shuffles are (1) the per-conversation count used
-for skew detection (map-side partial agg, tiny output) and (2) the single
-repartition by (conv_id, salt). Everything after is partition-local.
+At 100 TB scale the only shuffle is the single repartition by
+(xxhash64(conv_id), salt); the salt is row-local, so skew handling adds no
+job. Everything after is partition-local.
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from typing import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (BooleanType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
@@ -69,16 +70,15 @@ MANIFEST_SCHEMA = StructType([
 ])
 
 
-# Manifest-stats contract version. 2 = timestamp zone maps normalized to
-# ns-since-epoch + vsum_int/n_nulls columns present; manifests without
-# the marker AND without those columns predate the ns normalization, so
-# their datetime zone maps are raw Arrow-unit int64 (µs from Spark's
-# transfer) and must not be zone-pruned with ns bounds. 3 = bloom blobs
-# built with the crc32+adler32+splitmix hash family — blobs from older
-# manifests used a different hash and probing them with the current one
-# yields FALSE NEGATIVES (silently missing rows), so bloom pruning is
-# skipped entirely below version 3 (zone maps + residual filters remain
-# exact; only the bloom speedup is lost on pre-upgrade tables).
+# The on-disk format epoch, recorded as meta.json["stats_version"]. Epoch 3:
+# v2 column frames, byte-sliced bit-packing flagged in the width byte,
+# timestamp zone maps in ns-since-epoch, vsum_int/n_nulls stats, and bloom
+# blobs built with the crc32+adler32+splitmix hash family (_bloom_hash2).
+# Readers accept this epoch only (_read_meta): a table of any other epoch
+# raises and must be re-encoded — probing an older bloom blob with the
+# current hash yields FALSE NEGATIVES (silently missing rows), and older
+# datetime zone maps were in µs. Any change to a persisted hash, codec or
+# stat bumps this, which also invalidates resume markers (config_hash).
 STATS_VERSION = 3
 
 _SPLITMIX_C1, _SPLITMIX_C2 = 0xBF58476D1CE4E5B9, 0x94D049BB133111EB
@@ -238,11 +238,10 @@ class EncodeConfig:
     entropy: str | None = "lz4"
     # sort partitions inside the Arrow kernel (C++ sort_indices, overlaps
     # the shuffle read and scales with workers) instead of a JVM
-    # sortWithinPartitions — measured: the Tungsten string-key sort is the
-    # dominant non-scaling CPU stage on many-core single-box runs. Costs
-    # one whole-partition buffer in the worker (size partitions to memory).
-    # It is also the only way the shuffle path honours sort_keys that do
-    # not lead with conv_key: the JVM path sorts by (conv hash, order_key).
+    # sortWithinPartitions. Costs one whole-partition buffer in the worker
+    # (size partitions to memory). It is the only way the shuffle path
+    # honours sort_keys that do not lead with conv_key: the JVM path sorts
+    # by (xxhash64(conv_key), order_key).
     sort_in_kernel: bool = False
     # bloom-filter chunk stats for point lookups on NON-sort columns.
     # Zone maps only prune on sorted/clustered columns (min/max of an
@@ -370,17 +369,15 @@ def _bucket_sort_key(path: str) -> tuple:
 
 
 def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
-                             out_dir: str, cfg_hash: str,
-                             overrides: dict[str, str], chunk_rows: int,
-                             entropy: str | None,
-                             sort_keys: tuple[str, ...] | None,
-                             bloom_cols: tuple[str, ...] = (),
-                             bloom_bits: int = 16384,
-                             bloom_hashes: int = 5) -> list[dict]:
+                             out_dir: str, cfg_hash: str, cfg: EncodeConfig,
+                             sort_keys: tuple[str, ...] | None
+                             ) -> list[dict]:
     """Encode one partition's batch stream into one block file + resume
     marker; returns the manifest rows. Shared by the shuffle path
     (_encoder: pid = Spark partition) and the pre-bucketed path
-    (encode_table_prebucketed: pid = bucket-file index)."""
+    (encode_table_prebucketed: pid = bucket-file index). sort_keys: sort
+    the whole partition in the kernel first (None = input is in order)."""
+    chunk_rows, entropy = cfg.chunk_rows, cfg.entropy
     ckpt_dir = os.path.join(out_dir, "checkpoints")
     blk_dir = os.path.join(out_dir, "blocks")
     marker = os.path.join(ckpt_dir, _part_name(pid, f".{cfg_hash}.json"))
@@ -417,7 +414,7 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                 if chunk.num_rows == 0:
                     continue
                 t0 = time.perf_counter()
-                eff_overrides = dict(overrides)
+                eff_overrides = dict(cfg.codec_overrides)
                 for name, codec in sticky.items():
                     if name not in eff_overrides:
                         eff_overrides[name] = codec
@@ -429,19 +426,19 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                 dt = time.perf_counter() - t0
                 out.write(buf)
                 # actual per-frame codec incl. "+zstd" suffix where the
-                # outer stage was kept (it self-disables per frame)
-                applied = block_codec_report(buf)
-                per_col_out = _per_column_sizes(buf, chunk.schema.names)
+                # outer stage was kept (it self-disables per frame), and
+                # the frame's size
+                report = block_codec_report(buf)
                 for name in chunk.schema.names:
                     col = chunk.column(name).combine_chunks()
                     (zmin, zmax, zmin_s, zmax_s,
                      zsum, znulls) = _zone_stats(col)
                     manifest_rows.append({
                         "partition_id": pid, "chunk_id": chunk_id,
-                        "column": name, "codec": applied[name],
+                        "column": name, "codec": report[name][0],
                         "n_rows": chunk.num_rows,
                         "bytes_in": int(reference_column_size(col)),
-                        "bytes_out": per_col_out[name],
+                        "bytes_out": report[name][1],
                         "encode_sec": dt / len(chunk.schema.names),
                         "crc32": zlib.crc32(buf) & 0xFFFFFFFF,
                         "resumed": False,
@@ -449,9 +446,9 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
                         "vmin_str": zmin_s, "vmax_str": zmax_s,
                         "vsum_int": zsum, "n_nulls": znulls,
                         # base64 string: JSON-safe in resume markers
-                        "bloom_b64": (_bloom_build(col, bloom_bits,
-                                                   bloom_hashes)
-                                      if name in bloom_cols else None),
+                        "bloom_b64": (_bloom_build(col, cfg.bloom_bits,
+                                                   cfg.bloom_hashes)
+                                      if name in cfg.bloom_cols else None),
                     })
                 chunk_id += 1
 
@@ -497,11 +494,8 @@ def _encode_partition_stream(pid: int, batches: Iterator[pa.RecordBatch],
     return manifest_rows
 
 
-def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
-             chunk_rows: int, entropy: str | None = None,
-             sort_keys: tuple[str, ...] | None = None,
-             bloom_cols: tuple[str, ...] = (),
-             bloom_bits: int = 16384, bloom_hashes: int = 5):
+def _encoder(out_dir: str, cfg_hash: str, cfg: EncodeConfig,
+             sort_keys: tuple[str, ...] | None):
     """mapInArrow kernel: encode this partition's rows into one block file."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -511,53 +505,16 @@ def _encoder(out_dir: str, cfg_hash: str, overrides: dict[str, str],
         from pyspark import TaskContext
         pid = TaskContext.get().partitionId()
         yield _manifest_batch(_encode_partition_stream(
-            pid, batches, out_dir, cfg_hash, overrides, chunk_rows,
-            entropy, sort_keys, bloom_cols, bloom_bits, bloom_hashes))
+            pid, batches, out_dir, cfg_hash, cfg, sort_keys))
 
     return run
 
 
-def _per_column_sizes(block_buf: bytes, names: list[str]) -> dict[str, int]:
-    """Encoded byte size per column inside one block frame."""
-    import struct
-    n_cols = struct.unpack_from("<H", block_buf, 4)[0]
-    off = 14
-    out = {}
-    for _ in range(n_cols):
-        nlen = struct.unpack_from("<H", block_buf, off)[0]
-        off += 2
-        name = block_buf[off:off + nlen].decode("utf-8")
-        off += nlen
-        clen = struct.unpack_from("<Q", block_buf, off)[0]
-        off += 8 + clen
-        out[name] = clen
-    return out
+_MANIFEST_ARROW_SCHEMA = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 def _manifest_batch(rows: list[dict]) -> pa.RecordBatch:
-    arrays = {
-        "partition_id": pa.array([r["partition_id"] for r in rows], pa.int32()),
-        "chunk_id": pa.array([r["chunk_id"] for r in rows], pa.int32()),
-        "column": pa.array([r["column"] for r in rows], pa.string()),
-        "codec": pa.array([r["codec"] for r in rows], pa.string()),
-        "n_rows": pa.array([r["n_rows"] for r in rows], pa.int64()),
-        "bytes_in": pa.array([r["bytes_in"] for r in rows], pa.int64()),
-        "bytes_out": pa.array([r["bytes_out"] for r in rows], pa.int64()),
-        "encode_sec": pa.array([r["encode_sec"] for r in rows], pa.float64()),
-        "crc32": pa.array([r["crc32"] for r in rows], pa.int64()),
-        "resumed": pa.array([r["resumed"] for r in rows], pa.bool_()),
-        # .get(): resume markers written before zone maps existed stay
-        # readable (their chunks simply can't be pruned)
-        "vmin_num": pa.array([r.get("vmin_num") for r in rows], pa.float64()),
-        "vmax_num": pa.array([r.get("vmax_num") for r in rows], pa.float64()),
-        "vmin_str": pa.array([r.get("vmin_str") for r in rows], pa.string()),
-        "vmax_str": pa.array([r.get("vmax_str") for r in rows], pa.string()),
-        "vsum_int": pa.array([r.get("vsum_int") for r in rows], pa.int64()),
-        "n_nulls": pa.array([r.get("n_nulls") for r in rows], pa.int64()),
-        "bloom_b64": pa.array([r.get("bloom_b64") for r in rows],
-                              pa.string()),
-    }
-    return pa.RecordBatch.from_pydict(arrays)
+    return pa.RecordBatch.from_pylist(rows, schema=_MANIFEST_ARROW_SCHEMA)
 
 
 def salted_repartition(df: DataFrame, cfg: EncodeConfig,
@@ -625,36 +582,39 @@ def _encode_arranged(spark: SparkSession, df: DataFrame,
                      fingerprint: str,
                      kernel_sort_keys: tuple[str, ...] | None = None,
                      extra_meta: dict | None = None) -> DataFrame:
-    """Shared encode tail: write meta.json, run the chunking/codec kernel
-    over an already-arranged DataFrame (caller controls partitioning and
-    within-partition order), persist + return the manifest."""
-    os.makedirs(out_dir, exist_ok=True)
+    """Run the chunking/codec kernel over an already-arranged DataFrame
+    (caller controls partitioning and within-partition order), then the
+    shared encode tail."""
     cfg_hash = cfg.config_hash(fingerprint)
+    manifest = arranged.mapInArrow(
+        _encoder(out_dir, cfg_hash, cfg, kernel_sort_keys),
+        schema=MANIFEST_SCHEMA)
+    return _finish_encode(spark, out_dir, manifest, df.schema, cfg, cfg_hash,
+                          fingerprint, cfg.n_partitions, extra_meta)
+
+
+def _finish_encode(spark: SparkSession, out_dir: str, manifest: DataFrame,
+                   schema: StructType, cfg: EncodeConfig, cfg_hash: str,
+                   fingerprint: str, n_partitions: int,
+                   extra_meta: dict | None = None) -> DataFrame:
+    """The encode tail of every encode path: persist the manifest (running
+    the kernel job), read it back, and write meta.json — the table's
+    schema, config and format epoch (STATS_VERSION) — stamped with the
+    manifest's size."""
+    os.makedirs(out_dir, exist_ok=True)
     meta = {
-        "spark_schema": df.schema.jsonValue(),
+        "spark_schema": schema.jsonValue(),
         "config_hash": cfg_hash,
         "fingerprint": fingerprint,
-        "n_partitions": cfg.n_partitions,
+        "n_partitions": n_partitions,
         "chunk_rows": cfg.chunk_rows,
         "sort_keys": list(cfg.sort_keys),
-        # zone-map unit contract: >=2 means timestamp zone maps are
-        # ns-since-epoch (see _zone_stats / STATS_VERSION); absent means a
-        # pre-upgrade manifest whose datetime stats are raw Arrow-unit
-        # int64 (µs) — _pruned_chunks must not zone-prune datetime
-        # predicates against those
         "stats_version": STATS_VERSION,
+        **(extra_meta or {}),
     }
-    meta.update(extra_meta or {})
-
-    manifest = arranged.mapInArrow(
-        _encoder(out_dir, cfg_hash, cfg.codec_overrides, cfg.chunk_rows,
-                 entropy=cfg.entropy,
-                 sort_keys=kernel_sort_keys,
-                 bloom_cols=cfg.bloom_cols, bloom_bits=cfg.bloom_bits,
-                 bloom_hashes=cfg.bloom_hashes),
-        schema=MANIFEST_SCHEMA)
-    manifest.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
-    out = spark.read.parquet(os.path.join(out_dir, "manifest"))
+    mdir = os.path.join(out_dir, "manifest")
+    manifest.write.mode("overwrite").parquet(mdir)
+    out = spark.read.parquet(mdir)
     _record_manifest_size(out_dir, meta)
     return out
 
@@ -681,6 +641,19 @@ def _record_manifest_size(out_dir: str, meta: dict) -> None:
     meta["manifest_columns"] = int(n_cols)
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=1)
+
+
+def _read_meta(out_dir: str) -> dict:
+    """meta.json of an encoded table, after the one reader-side format
+    check: its epoch (stats_version) must be STATS_VERSION."""
+    with open(os.path.join(out_dir, "meta.json")) as f:
+        meta = json.load(f)
+    found = meta.get("stats_version")
+    if found != STATS_VERSION:
+        raise ValueError(
+            f"{out_dir} has format epoch {found} (meta.json stats_version),"
+            f" expected {STATS_VERSION}: re-encode the table")
+    return meta
 
 
 def _zorder_long_expr(df: DataFrame, name: str):
@@ -1180,19 +1153,7 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
     if missing:
         raise ValueError(f"encode keys {missing} not in input columns "
                          f"{schema.names}")
-    os.makedirs(out_dir, exist_ok=True)
     cfg_hash = cfg.config_hash(fingerprint)
-    meta = {
-        "spark_schema": schema.jsonValue(),
-        "config_hash": cfg_hash,
-        "fingerprint": fingerprint,
-        "n_partitions": len(paths),
-        "chunk_rows": cfg.chunk_rows,
-        "sort_keys": list(cfg.sort_keys),
-        "prebucketed": True,
-        "stats_version": STATS_VERSION,
-    }
-
     idx = {p: i for i, p in enumerate(paths)}
 
     def _ffp(p):
@@ -1204,10 +1165,6 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
                 f"{st.st_mtime_ns}").encode()
         return hashlib.md5(blob).hexdigest()[:12]
     fps = {p: _ffp(p) for p in paths}
-    overrides, chunk_rows = cfg.codec_overrides, cfg.chunk_rows
-    entropy, sort_keys = cfg.entropy, cfg.sort_keys
-    bloom_cols, bloom_bits = cfg.bloom_cols, cfg.bloom_bits
-    bloom_hashes = cfg.bloom_hashes
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .runtime import pin_worker_threads
@@ -1227,11 +1184,9 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
 
         for batch in batches:
             for path in batch.column(0).to_pylist():
-                rows = _encode_partition_stream(
-                    idx[path], lazy_batches(path), out_dir, fps[path],
-                    overrides, chunk_rows, entropy, sort_keys,
-                    bloom_cols, bloom_bits, bloom_hashes)
-                yield _manifest_batch(rows)
+                yield _manifest_batch(_encode_partition_stream(
+                    idx[path], lazy_batches(path), out_dir, fps[path], cfg,
+                    cfg.sort_keys))
 
     # exactly ONE file per task: parallelize slices the path list
     # deterministically (hash-repartition would put 2-3 files on some
@@ -1240,11 +1195,10 @@ def encode_table_prebucketed(spark: SparkSession, input_dir: str,
         spark.sparkContext.parallelize([(p,) for p in paths],
                                        numSlices=len(paths)),
         schema="path string")
-    manifest = pdf.mapInArrow(run, schema=MANIFEST_SCHEMA)
-    manifest.write.mode("overwrite").parquet(os.path.join(out_dir, "manifest"))
-    out = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    _record_manifest_size(out_dir, meta)
-    return out
+    return _finish_encode(spark, out_dir,
+                          pdf.mapInArrow(run, schema=MANIFEST_SCHEMA),
+                          schema, cfg, cfg_hash, fingerprint, len(paths),
+                          {"prebucketed": True})
 
 
 def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
@@ -1266,10 +1220,7 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
     merged table reads through decode_table like any encode_table
     output. Distributed: one task per output file; the driver only
     handles the O(#files) grouping metadata."""
-    metas = []
-    for d in src_dirs:
-        with open(os.path.join(d, "meta.json")) as f:
-            metas.append(json.load(f))
+    metas = [_read_meta(d) for d in src_dirs]
     # ADDITIVE schema merge (Iceberg-style evolution): later epochs may
     # add columns; same-named fields must keep their type. Blocks from
     # epochs that predate a column decode it as NULL (decode_table's
@@ -1308,9 +1259,6 @@ def compact_blocks(spark: SparkSession, src_dirs: list[str], out_dir: str,
     meta["spark_schema"] = merged_schema
     meta["n_partitions"] = len(groups)
     meta["compacted_from"] = len(entries)
-    # a compaction mixing any pre-upgrade source inherits the weakest
-    # stats contract — datetime zone pruning then stays disabled for it
-    meta["stats_version"] = min(m.get("stats_version", 0) for m in metas)
 
     blk_dir = os.path.join(out_dir, "blocks")
 
@@ -1581,7 +1529,7 @@ def _pruned_chunks(spark: SparkSession, out_dir: str,
                    predicates: list[tuple]) -> dict[int, set] | None:
     """Chunks whose zone maps can satisfy EVERY (col, lo, hi) range
     (inclusive bounds, conjunction): {partition_id: set(chunk_id)}.
-    Chunks without stats (old manifests, unsupported types) are always
+    Chunks without stats (unsupported types, all-NULL chunks) are always
     kept — pruning is only ever an optimization, never a correctness
     gate. Returns None when no manifest exists. Driver-side: O(#chunks)
     tiny rows; for extreme chunk counts push the same overlap filter
@@ -1601,8 +1549,8 @@ def _pruned_chunks(spark: SparkSession, out_dir: str,
             keep = {pid: keep[pid] & cs for pid, cs in this.items()
                     if pid in keep}
             keep = {pid: cs for pid, cs in keep.items() if cs}
-    # None = no predicate could use stats (e.g. datetime predicates on a
-    # pre-upgrade manifest): decode everything. {} = stats genuinely rule
+    # None = no predicate could use stats (e.g. an aware datetime bound on
+    # a TIMESTAMP_NTZ column): decode everything. {} = stats genuinely rule
     # out every chunk.
     return keep
 
@@ -1616,42 +1564,19 @@ def _pred_survivor_dfs(spark: SparkSession, out_dir: str,
     mpath = os.path.join(out_dir, "manifest")
     if not os.path.isdir(mpath):
         return None
+    meta = _read_meta(out_dir)
     man = spark.read.parquet(mpath)
     tz = _session_tz(spark)
-    # pre-upgrade manifests (no stats_version marker and none of the
-    # columns that shipped with the ns normalization) store datetime zone
-    # maps in raw Arrow units (µs) — comparing ns bounds against them
-    # would prune EVERY chunk and silently return zero rows, so datetime
-    # predicates simply don't prune there (residual filter stays exact)
-    try:
-        with open(os.path.join(out_dir, "meta.json")) as f:
-            _meta = json.load(f)
-    except OSError:
-        _meta = {}
-    ns_stats = (_meta.get("stats_version", 0) >= 2
-                or "vsum_int" in man.columns or "n_nulls" in man.columns)
-    # bloom blobs are only probeable if they were built with the CURRENT
-    # hash family (stats_version >= 3): probing an older blob with a
-    # different hash produces false NEGATIVES — silently dropped rows —
-    # the one failure mode pruning must never have
-    blooms_ok = _meta.get("stats_version", 0) >= 3
     # TIMESTAMP_NTZ zone maps hold WALL-CLOCK ns (no instant semantics):
     # naive bounds must convert as-if-UTC — resolving them in a non-UTC
     # session tz would shift bounds by the offset and prune chunks the
     # residual filter keeps. Aware bounds against NTZ can't prune safely.
-    ntz_cols: set = set()
-    try:
-        sch = StructType.fromJson(_meta["spark_schema"])
-        ntz_cols = {f.name for f in sch.fields
-                    if f.dataType.typeName() == "timestamp_ntz"}
-    except Exception:
-        pass
+    ntz_cols = {f.name for f in StructType.fromJson(meta["spark_schema"]).fields
+                if f.dataType.typeName() == "timestamp_ntz"}
     import datetime as _dt
     sels: list[DataFrame] = []
     for pred in predicates:
         bound0 = pred[1][0] if len(pred) == 2 else pred[1]
-        if isinstance(bound0, (_dt.date, _dt.datetime)) and not ns_stats:
-            continue
         pred_tz = tz
         if pred[0] in ntz_cols and isinstance(bound0, _dt.datetime):
             if bound0.tzinfo is not None:
@@ -1681,7 +1606,7 @@ def _pred_survivor_dfs(spark: SparkSession, out_dir: str,
         keep_cond = (vmin.isNull() | vmax.isNull()
                      | ((vmax >= F.lit(lo)) & (vmin <= F.lit(hi))))
         sel = man.filter(F.col("column") == pcol).filter(keep_cond)
-        if bloomable and blooms_ok and "bloom_b64" in man.columns:
+        if bloomable:
             # point lookup(s): probe the per-chunk blooms DISTRIBUTED (the
             # blobs never reach the driver — only surviving ids do); a
             # chunk survives if ANY member may be present
@@ -1736,8 +1661,7 @@ def decode_table(spark: SparkSession, out_dir: str,
     datetime predicates rely on the Spark residual filter only.
     partitions: decode only these partition ids' block files (the
     snapshot_diff CDC path reads only changed partitions)."""
-    with open(os.path.join(out_dir, "meta.json")) as f:
-        meta = json.load(f)
+    meta = _read_meta(out_dir)
     schema = StructType.fromJson(meta["spark_schema"])
     predicates = _normalize_predicates(predicate)
     extra_pred_cols: list[str] = []  # decoded only to evaluate predicates
@@ -1969,29 +1893,25 @@ def manifest_stats(spark: SparkSession, out_dir: str) -> DataFrame:
 
     Exactness: counts are exact (n_rows/n_nulls per chunk); SUM is exact
     for integer/boolean columns (per-chunk int64 sums, NULL when any
-    chunk lacked one — overflow, float column, or pre-upgrade manifest);
+    chunk lacked one — overflow or a non-integer column);
     MIN/MAX come from the zone maps, exact for numerics up to 2^53
     (conservatively widened beyond — consumers needing certainty beyond
     that must decode), string bounds exact. Timestamp bounds are in
     ns-since-epoch. Whole-table only: stats of a FILTERED read must go
     through decode_table (pruned chunk supersets would overcount)."""
+    _read_meta(out_dir)
     man = spark.read.parquet(os.path.join(out_dir, "manifest"))
-    has_sum = "vsum_int" in man.columns
-    vsum = (F.when(F.max(F.col("vsum_int").isNull().cast("int")) == 0,
-                   F.sum("vsum_int"))
-            if has_sum else F.lit(None).cast("long"))
-    n_nulls = (F.sum("n_nulls") if "n_nulls" in man.columns
-               else F.lit(None).cast("long"))
+    vsum = F.when(F.max(F.col("vsum_int").isNull().cast("int")) == 0,
+                  F.sum("vsum_int"))
     return (man.groupBy("column")
             .agg(F.sum("n_rows").alias("n_rows"),
-                 n_nulls.alias("n_nulls"),
+                 F.sum("n_nulls").alias("n_nulls"),
                  F.min("vmin_num").alias("min_num"),
                  F.max("vmax_num").alias("max_num"),
                  F.min("vmin_str").alias("min_str"),
                  F.max("vmax_str").alias("max_str"),
                  vsum.alias("sum_int"))
-            .withColumn("n_values", F.col("n_rows") - F.coalesce(
-                F.col("n_nulls"), F.lit(0))))
+            .withColumn("n_values", F.col("n_rows") - F.col("n_nulls")))
 
 
 def validate_blocks(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -392,10 +392,38 @@ def test_entropy_stage_in_blocks_and_report():
     codecs = choose_codecs(tbl, entropy="zstd")
     buf = encode_block(tbl, codecs, entropy="zstd")
     report = block_codec_report(buf)
-    assert report["text"].endswith("+zstd"), report
+    assert report["text"][0].endswith("+zstd"), report
     out, used = decode_block(buf)
     assert used == len(buf)
     assert out.equals(tbl)
+    # frame sizes come from the same header walk: they tile the block
+    # after the 14-byte block header and each [u16 len][name][u64 len]
+    assert len(buf) == 14 + sum(2 + len(name) + 8 + nbytes
+                                for name, (_c, nbytes) in report.items())
+
+
+def test_corrupt_frames_raise_value_error():
+    """Bytes read from disk that do not describe a valid frame raise
+    ValueError (never an assert, which `python -O` strips, nor a
+    KeyError): a column frame length header, and an entropy backend id."""
+    tbl = pa.table({"x": pa.array(np.arange(600, dtype=np.int64)),
+                    "text": pa.array(["abc def"] * 600)})
+    buf = encode_block(tbl, {"x": "plain", "text": "plain"}, entropy="zstd")
+    # the last column's u64 frame length sits right before its frame
+    frame = encode_column(tbl.column("text"), "plain", entropy="zstd")
+    pos = len(buf) - len(frame) - 8
+    assert int.from_bytes(buf[pos:pos + 8], "little") == len(frame)
+    for bad_len in (len(frame) - 1, len(frame) + 1):
+        corrupt = bytearray(buf)
+        corrupt[pos:pos + 8] = bad_len.to_bytes(8, "little")
+        with pytest.raises(ValueError):
+            decode_block(bytes(corrupt))
+
+    assert frame[5] & 2, "frame should carry the entropy stage"
+    corrupt = bytearray(frame)
+    corrupt[14 + 8] = 0xEE    # backend id: first payload byte
+    with pytest.raises(ValueError, match="entropy backend"):
+        decode_column(bytes(corrupt))
 
 
 def test_selector_float_trial_with_entropy():

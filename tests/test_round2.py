@@ -101,9 +101,8 @@ def test_ngram_jaccard_df_cap(spark):
 
 def test_framing_v2_and_entropy_validation():
     import supersonic_spark.codecs as C
-    from supersonic_spark.codecs.framing import (_DECODABLE_VERSIONS,
-                                                 _VERSION, validate_entropy)
-    assert _VERSION == 2 and 1 in _DECODABLE_VERSIONS
+    from supersonic_spark.codecs.framing import _VERSION, validate_entropy
+    assert _VERSION == 2
     with pytest.raises(ValueError, match="snappy"):
         validate_entropy("snappy")
     with pytest.raises(ValueError):

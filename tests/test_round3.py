@@ -430,22 +430,47 @@ def test_pack_ints_block_roundtrip_all_widths():
         assert used == len(buf) and np.array_equal(out, v), width
 
 
-def test_unpack_ints_block_decodes_old_container_layout():
-    # blocks written before the sliced layout carry a bare width byte;
-    # they must keep decoding through the container path
+def test_pre_epoch_frames_rejected():
+    # frames from before the current format epoch raise ValueError instead
+    # of decoding: a v1 column frame, and a bare width byte >= 8 (the old
+    # container layout, without the sliced-layout bit) in both readers
     import struct
-    from supersonic_spark.codecs.bitutil import pack_uints, unpack_ints_block
+    import pyarrow as pa
+    import supersonic_spark.codecs as C
+    from supersonic_spark.codecs.bitutil import (pack_ints_block, pack_uints,
+                                                 unpack_ints_block)
+    from supersonic_spark.codecs.kernels import (decode_pfor_delta,
+                                                 encode_pfor_delta,
+                                                 typecode_of)
+    frame = bytearray(C.encode_column(pa.array([1, 2, 3]), "plain"))
+    frame[2] = 1
+    with pytest.raises(ValueError, match="version 1"):
+        C.decode_column(bytes(frame))
+
     rng = np.random.default_rng(1)
     v = rng.integers(0, 1 << 12, size=2000).astype(np.int64)
     ref = int(v.min())
     width = int(int(v.max()) - ref).bit_length()
     old = (struct.pack("<q", ref) + struct.pack("<Q", len(v))
            + bytes([width]) + pack_uints((v - ref).view(np.uint64), width))
-    out, used = unpack_ints_block(old)
-    assert used == len(old) and np.array_equal(out, v)
+    with pytest.raises(ValueError, match="width byte"):
+        unpack_ints_block(old)
+    # the sliced-layout bit on a narrow width is rejected too
+    narrow = bytearray(pack_ints_block(np.arange(5, dtype=np.int64)))
+    narrow[16] |= 0x80
+    with pytest.raises(ValueError, match="width byte"):
+        unpack_ints_block(bytes(narrow))
+
+    arr = pa.array(np.cumsum(rng.integers(0, 5000, size=5000)), pa.int64())
+    tc = typecode_of(arr.type)
+    buf = bytearray(encode_pfor_delta(arr, tc))
+    assert buf[16] & 0x80 and (buf[16] & 0x7F) >= 8
+    buf[16] &= 0x7F
+    with pytest.raises(ValueError, match="width byte"):
+        decode_pfor_delta(bytes(buf), len(arr), tc)
 
 
-def test_pfor_delta_old_width_byte_decodes():
+def test_pfor_delta_wide_width_byte_is_sliced():
     import struct
     from supersonic_spark.codecs.kernels import (decode_pfor_delta,
                                                  encode_pfor_delta,
@@ -459,20 +484,6 @@ def test_pfor_delta_old_width_byte_decodes():
     buf = encode_pfor_delta(arr, tc)
     assert buf[16] & 0x80, "wide delta stream should use sliced layout"
     assert decode_pfor_delta(buf, len(arr), tc).equals(arr)
-
-
-# --- manifest compatibility -------------------------------------------------
-
-def test_manifest_batch_accepts_pre_zonemap_rows():
-    # resume markers written before zone maps existed lack the stats
-    # keys; they must still load (their chunks simply can't be pruned)
-    from supersonic_spark.pipeline import _manifest_batch
-    row = {"partition_id": 0, "chunk_id": 0, "column": "c", "codec": "rle",
-           "n_rows": 10, "bytes_in": 100, "bytes_out": 50,
-           "encode_sec": 0.1, "crc32": 123, "resumed": True}
-    batch = _manifest_batch([row])
-    assert batch.num_rows == 1
-    assert batch.column(batch.schema.get_field_index("vmin_num"))[0].as_py() is None
 
 
 # --- streaming decode source ------------------------------------------------

@@ -116,53 +116,40 @@ def test_join_prune_range_predicate(spark, tmp_path):
     assert b.count() == want.count() > 0
 
 
-def _emulate_pre_upgrade_manifest(spark, out):
-    """Rewrite an encoded table's manifest/meta to the pre-upgrade
-    contract: no stats_version, no vsum_int/n_nulls/bloom_b64 columns,
-    timestamp zone maps in raw µs (what old manifests actually stored)."""
+def test_tables_of_other_epochs_rejected(spark, tmp_path):
+    """A table whose meta.json declares any format epoch other than
+    STATS_VERSION — none at all, or an older one — is rejected by every
+    reader with a ValueError that names both epochs and says to
+    re-encode, instead of decoding or pruning under the wrong contract
+    (older bloom blobs false-negative, older datetime zone maps are µs)."""
     import json
-    mdir = os.path.join(out, "manifest")
-    man = spark.read.parquet(mdir).drop("vsum_int", "n_nulls", "bloom_b64")
-    man = man.withColumn(
-        "vmin_num", F.when(F.col("column") == "ts",
-                           F.col("vmin_num") / 1000).otherwise(F.col("vmin_num"))
-    ).withColumn(
-        "vmax_num", F.when(F.col("column") == "ts",
-                           F.col("vmax_num") / 1000).otherwise(F.col("vmax_num")))
-    tmp = mdir + "_old"
-    man.write.mode("overwrite").parquet(tmp)
-    import shutil
-    shutil.rmtree(mdir)
-    os.replace(tmp, mdir)
+    from supersonic_spark.pipeline import (STATS_VERSION, _pruned_chunks,
+                                           compact_blocks, decode_table,
+                                           manifest_stats)
+    _src, out = _encode_fixture(spark, tmp_path, "epoch")
     mpath = os.path.join(out, "meta.json")
     with open(mpath) as f:
         meta = json.load(f)
-    meta.pop("stats_version", None)
-    with open(mpath, "w") as f:
-        json.dump(meta, f)
-
-
-def test_datetime_predicate_on_pre_upgrade_manifest(spark, tmp_path):
-    """A datetime predicate against a manifest whose ts zone maps are in
-    µs (pre-upgrade) must NOT zone-prune (ns bounds vs µs stats would
-    silently drop every chunk); the residual filter keeps results exact.
-    Numeric predicates must still prune normally on the same manifest."""
-    from supersonic_spark.pipeline import decode_table
-    src, out = _encode_fixture(spark, tmp_path, "old_manifest")
-    _emulate_pre_upgrade_manifest(spark, out)
-
-    lo_hi = src.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")) \
-               .collect()[0]
-    lo, hi = lo_hi["lo"], lo_hi["hi"]
-    mid = lo + (hi - lo) / 2
-    want = src.filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(mid)))
-    got = decode_table(spark, out, predicate=("ts", lo, mid))
-    assert got.count() == want.count() > 0
-
-    # numeric predicate still prunes + stays exact on the old manifest
-    got2 = decode_table(spark, out, predicate=("turn_idx", 0, 1))
-    want2 = src.filter(F.col("turn_idx") <= 1)
-    assert got2.count() == want2.count() > 0
+    assert meta["stats_version"] == STATS_VERSION
+    decode_table(spark, out).limit(1).collect()      # current epoch reads
+    pred = [("turn_idx", 0, 1)]
+    for found in (None, 2):
+        old = dict(meta)
+        if found is None:
+            old.pop("stats_version")
+        else:
+            old["stats_version"] = found
+        with open(mpath, "w") as f:
+            json.dump(old, f)
+        msg = f"epoch {found} .* expected {STATS_VERSION}: re-encode"
+        with pytest.raises(ValueError, match=msg):
+            decode_table(spark, out)
+        with pytest.raises(ValueError, match=msg):
+            _pruned_chunks(spark, out, pred)
+        with pytest.raises(ValueError, match=msg):
+            compact_blocks(spark, [out], str(tmp_path / f"c{found}"))
+        with pytest.raises(ValueError, match=msg):
+            manifest_stats(spark, out)
 
 
 def test_datetime_predicate_current_manifest_prunes(spark, tmp_path):
@@ -446,9 +433,9 @@ def test_lsh_indexed_partition_pruning(spark, tmp_path):
 def test_bloom_pruning_version_guard(spark, tmp_path):
     """Bloom blobs written before the hash-family change (stats_version
     < 3) false-negative under the current probe — the real-table bug
-    found in round 5's point-lookup bench. Pruning must SKIP blooms on
-    such manifests (exact results, zone-only pruning) and use them on
-    current ones."""
+    found in round 5's point-lookup bench. Such a table is rejected
+    (re-encode it); current ones prune with their blooms and stay
+    exact."""
     import json
     from supersonic_spark.pipeline import (_pruned_chunks, decode_table)
     src, out = _encode_fixture(spark, tmp_path, "bloomver",
@@ -464,26 +451,22 @@ def test_bloom_pruning_version_guard(spark, tmp_path):
                      .select("conv_id", "turn_idx").collect()))
     assert got == want and len(got) > 0
 
-    # downgrade the manifest contract to v2: same blobs, declared older
-    # hash family — pruning must stop trusting them
-    mpath = os.path.join(out, "meta.json")
-    meta = json.load(open(mpath))
-    meta["stats_version"] = 2
-    json.dump(meta, open(mpath, "w"))
-    kept_v2 = sum(len(s) for s in _pruned_chunks(spark, out, pred).values())
-    assert kept_v2 >= kept_v3     # no bloom -> equal or more chunks kept
-    got2 = sorted(map(tuple,
-                      decode_table(spark, out, predicate=pred[0])
-                      .select("conv_id", "turn_idx").collect()))
-    assert got2 == want
-
-    # and on a conv-clustered layout the bloom genuinely prunes at v3:
-    # the shuffle spreads the hash space, so a fake "wrong-hash" blob
-    # situation is exactly what v2 declares; v3 must be < all chunks
+    # on a conv-clustered layout the bloom genuinely prunes at v3
     total = (spark.read.parquet(out + "/manifest")
              .filter(F.col("column") == "conv_id")
              .select("partition_id", "chunk_id").distinct().count())
     assert kept_v3 < total
+
+    # downgrade the manifest contract to v2: same blobs, declared older
+    # hash family — the table is refused instead of pruned with them
+    mpath = os.path.join(out, "meta.json")
+    meta = json.load(open(mpath))
+    meta["stats_version"] = 2
+    json.dump(meta, open(mpath, "w"))
+    with pytest.raises(ValueError, match="re-encode"):
+        _pruned_chunks(spark, out, pred)
+    with pytest.raises(ValueError, match="re-encode"):
+        decode_table(spark, out, predicate=pred[0])
 
 
 def test_upsert_bucketized_incremental(spark, tmp_path):
